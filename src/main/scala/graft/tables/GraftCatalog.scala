@@ -1253,7 +1253,7 @@ private[tables] final class GraftWriteBuilder(
   * the previous table untouched.
   */
 private[tables] final class GraftStagedTable(
-    ident: String, path: String, tableSchema: StructType,
+    ident: String, path: String, stagedSchema: StructType,
     partCols: Seq[String], keyCol: Option[String], cons: Map[String, String],
     spark: SparkSession, onCommitted: GraftTable => Unit)
   extends Table with SupportsWrite
@@ -1262,7 +1262,7 @@ private[tables] final class GraftStagedTable(
   @volatile private var captured: Option[DataFrame] = None
 
   override def name(): String = ident
-  override def schema(): StructType = tableSchema
+  override def schema(): StructType = stagedSchema
   // RTAS plans an OverwriteByExpression(true) against the staged table —
   // "overwrite" of a not-yet-existing capture is simply the capture
   override def capabilities(): util.Set[TableCapability] =
@@ -1285,8 +1285,8 @@ private[tables] final class GraftStagedTable(
               // cast aligns residual nullability flags (same as the live
               // table's write path). Captured, not written — the single
               // atomic commit happens in commitStagedChanges().
-              captured = Some(data.toDF(tableSchema.fieldNames.toIndexedSeq: _*)
-                .select(tableSchema.fields.toIndexedSeq.map(f =>
+              captured = Some(data.toDF(stagedSchema.fieldNames.toIndexedSeq: _*)
+                .select(stagedSchema.fields.toIndexedSeq.map(f =>
                   col(f.name).cast(f.dataType).as(f.name)): _*))
             }
           }
@@ -1295,7 +1295,7 @@ private[tables] final class GraftStagedTable(
 
   override def commitStagedChanges(): Unit = {
     val df = captured.getOrElse(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema))
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stagedSchema))
     val logDir = new Path(path, "_graft_log")
     val exists = logDir.getFileSystem(spark.sessionState.newHadoopConf())
       .exists(logDir)
@@ -1318,27 +1318,27 @@ private[tables] final class GraftStagedTable(
   * the data tables.
   */
 private[tables] final class GraftMetadataTable(
-    ident: String, tableSchema: StructType,
+    ident: String, rowSchema: StructType,
     rows: () => Seq[org.apache.spark.sql.Row])
   extends Table with SupportsRead {
 
   override def name(): String = ident
-  override def schema(): StructType = tableSchema
+  override def schema(): StructType = rowSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = tableSchema
+        override def readSchema(): StructType = rowSchema
         override def toV1TableScan[T <: BaseRelation with TableScan](
             context: SQLContext): T = {
           val relation: BaseRelation with TableScan = new BaseRelation with TableScan {
             override def sqlContext: SQLContext = context
-            override def schema: StructType = tableSchema
+            override def schema: StructType = rowSchema
             override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
               SparkSession.active.createDataFrame(
-                rows().asJava, tableSchema).rdd
+                rows().asJava, rowSchema).rdd
           }
           relation.asInstanceOf[T]
         }

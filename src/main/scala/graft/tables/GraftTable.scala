@@ -87,56 +87,42 @@ final class GraftTable private (
     */
   private def partSourceCols: Seq[String] = partSpecs.map(_.sourceCol)
 
-  /** The schema is versioned WITH the data: every commit's metadata carries
-    * the schema in force at that version, so time travel reads old versions
-    * with their own (pre-evolution) schema.
-    */
   // commit files are immutable once written (vacuum never touches the
   // log), so parsed commits memoize safely — snapshot assembly stays one
   // file-read per NEW version instead of O(versions) re-reads per op
   private val commitCache =
-    scala.collection.concurrent.TrieMap.empty[Long, (Map[String, Any], Seq[AddFile], Seq[String])]
-  private def cachedCommit(v: Long): (Map[String, Any], Seq[AddFile], Seq[String]) =
-    commitCache.getOrElseUpdate(v, readCommit(fs, logDir, v))
+    scala.collection.concurrent.TrieMap.empty[Long, (TableMetadata, Seq[AddFile], Seq[String])]
+  private def cachedCommit(v: Long): (TableMetadata, Seq[AddFile], Seq[String]) =
+    commitCache.getOrElseUpdate(v, readCommit(fs, logDir, v, schemaJson))
 
-  private def schemaAt(v: Long): StructType =
-    DataType.fromJson(cachedCommit(v)._1
-      .get("schema").map(_.toString).getOrElse(schemaJson)).asInstanceOf[StructType]
+  /** The table definition in force at version `v` — see [[TableMetadata]]. */
+  private def metadataAt(v: Long): TableMetadata = cachedCommit(v)._1
 
-  /** COLUMN MAPPING (rename support): each commit's metadata carries the
-    * logical→physical name map in force at that version (non-identity
-    * entries only; absent = identity, so pre-mapping logs read unchanged).
-    * PHYSICAL names — what parquet files store — are assigned when a
-    * column first appears and NEVER change; `renameColumn` only rebinds the
-    * logical name in a metadata commit. Files written in any era therefore
-    * resolve by their stable physical names, and time travel reads each
-    * version under its own logical names. This is the published lakehouse
-    * column-mapping design (name-mode), scoped to renames: DROP stays loud,
-    * and the key/partition columns cannot be renamed (their names are load-
-    * bearing in the log's stats and partition tuples).
+  /** The latest commit's metadata. */
+  private def metadata: TableMetadata = metadataAt(version)
+
+  /** The table at `asOf` (default: the latest version), from ONE listing of
+    * the log; its files replay from the newest checkpoint at-or-before
+    * `asOf` plus the commit tail, not every commit since creation.
     */
-  private def colmapAt(v: Long): Map[String, String] =
-    cachedCommit(v)._1.get("colmap") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, pv) => k -> pv.toString }.toMap
-      case _ => Map.empty
-    }
+  private[tables] def snapshotAt(asOf: Option[Long] = None): Snapshot =
+    snapshotIn(listLog(fs, logDir), asOf)
 
-  private def currentColmap: Map[String, String] =
-    listVersions(fs, logDir).lastOption.map(colmapAt).getOrElse(Map.empty)
-
-  /** ANALYZE-computed per-column NDV (approx distinct counts) in force at
-    * a version, keyed by PHYSICAL name (rename-stable). Advisory planner
-    * statistics — staleness affects plan quality, never correctness.
-    */
-  private def ndvAt(v: Long): Map[String, Long] =
-    cachedCommit(v)._1.get("ndv") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, n) => k -> n.asInstanceOf[Number].longValue }.toMap
-      case _ => Map.empty
-    }
+  private def snapshotIn(log: LogListing, asOf: Option[Long]): Snapshot = {
+    val v = asOf.getOrElse(log.latest(logDir))
+    require(log.versions.contains(v),
+      s"version $v does not exist under $logDir (have ${log.versions.mkString(",")})")
+    new Snapshot(v, metadataAt(v), {
+      val cp = log.checkpoints.filter(_ <= v).lastOption
+      val active = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
+      cp.foreach(c => readCheckpoint(fs, logDir, c).foreach(a => active(a.path) = a))
+      log.versions.filter(w => w <= v && cp.forall(w > _)).foreach { w =>
+        val (_, adds, removes) = cachedCommit(w)
+        applyActions(active, adds, removes)
+      }
+      active.values.toSeq
+    })
+  }
 
   /** ANALYZE: compute per-column approximate distinct counts in ONE pass
     * (`approx_count_distinct`, the HLL sketch — at 100 TB a single scan,
@@ -152,8 +138,9 @@ final class GraftTable private (
     * file moves. Returns the NDV map by LOGICAL name.
     */
   def analyze(columns: Seq[String] = Nil): Map[String, Long] = {
-    val v = version
-    val schema = schemaAt(v)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val schema = md.structType
     val atomic = schema.fields.filterNot(f => f.dataType match {
       case _: org.apache.spark.sql.types.ArrayType |
            _: org.apache.spark.sql.types.MapType | _: StructType => true
@@ -162,15 +149,14 @@ final class GraftTable private (
     val cols = if (columns.isEmpty) atomic else columns
     cols.foreach(c => require(atomic.contains(c),
       s"analyze: no atomic column '$c' in ${schema.fieldNames.mkString(",")}"))
-    val row = labeled("analyze")(snapshot(Some(v))
+    val row = labeled("analyze")(readFiles(snap.files, md)
       .agg(count(lit(1)).as("__n"),
         cols.map(c => approx_count_distinct(col(c)).as(c)): _*).head())
-    val cm = colmapAt(v)
     val byLogical = cols.zipWithIndex
       .map { case (c, i) => c -> row.getLong(i + 1) }.toMap
-    val byPhys = byLogical.map { case (c, n) => physName(cm, c) -> n }
-    commit(v, "analyze", Nil, Nil, dataChange = false,
-      newNdv = Some(ndvAt(v) ++ byPhys))
+    val byPhys = byLogical.map { case (c, n) => md.physName(c) -> n }
+    commit(snap, "analyze", Nil, Nil, dataChange = false,
+      update = m => m.copy(ndv = m.ndv ++ byPhys))
     byLogical
   }
 
@@ -180,21 +166,9 @@ final class GraftTable private (
   def columnNdv: Map[String, Long] = columnNdvAt(version)
 
   private[tables] def columnNdvAt(v: Long): Map[String, Long] = {
-    val cm = colmapAt(v)
-    val n = ndvAt(v)
-    schemaAt(v).fieldNames.toSeq
-      .flatMap(l => n.get(physName(cm, l)).map(l -> _)).toMap
-  }
-
-  /** The (readerFeatures, writerFeatures) sets a version's commit carries —
-    * empty for legacy commits predating the protocol gate.
-    */
-  private def featuresAt(v: Long): (Set[String], Set[String]) = {
-    def get(k: String): Set[String] = cachedCommit(v)._1.get(k) match {
-      case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSet
-      case _ => Set.empty
-    }
-    (get("readerFeatures"), get("writerFeatures"))
+    val md = metadataAt(v)
+    md.structType.fieldNames.toSeq
+      .flatMap(l => md.ndv.get(md.physName(l)).map(l -> _)).toMap
   }
 
   /** The protocol feature sets in force at the current version (reader,
@@ -202,75 +176,19 @@ final class GraftTable private (
     * [[GraftTable.SupportedReaderFeatures]]).
     */
   def features: (Seq[String], Seq[String]) = {
-    val (r, w) = featuresAt(version)
-    (r.toSeq.sorted, w.toSeq.sorted)
+    val md = metadata
+    (md.readerFeatures.toSeq.sorted, md.writerFeatures.toSeq.sorted)
   }
 
-  /** Physical names RETIRED by DROP COLUMN, carried forward in every
-    * commit's metadata: dropped columns' values still live in old files,
-    * so a later column must never bind the same physical name — by-name
-    * parquet resolution would resurface the dead values. `addColumns`
-    * assigns a fresh physical name on collision; the commit invariant
-    * below rejects any other path that would reuse one.
-    */
-  private def retiredAt(v: Long): Seq[String] =
-    cachedCommit(v)._1.get("retired") match {
-      case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSeq
-      case _ => Nil
-    }
-
-  /** CHECK constraints (name → predicate SQL) in force at a version,
-    * carried forward in commit metadata like the column mapping.
-    */
-  private def constraintsAt(v: Long): Map[String, String] =
-    cachedCommit(v)._1.get("constraints") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, pv) => k -> pv.toString }.toMap
-      case _ => Map.empty
-    }
-
   /** The live CHECK constraints (name → predicate SQL). */
-  def constraints: Map[String, String] =
-    listVersions(fs, logDir).lastOption.map(constraintsAt).getOrElse(Map.empty)
-
-  /** BLOOM FILTER INDEX config (PHYSICAL column name → expected NDV) in
-    * force at a version, carried forward in commit metadata like the
-    * column mapping. Physical names keep the config stable across
-    * renames; see [[BloomIndex]] for the design.
-    */
-  private def bloomAt(v: Long): Map[String, Long] =
-    cachedCommit(v)._1.get("bloom") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, n) => k -> n.asInstanceOf[Number].longValue }.toMap
-      case _ => Map.empty
-    }
-
-  private def currentBloom: Map[String, Long] =
-    listVersions(fs, logDir).lastOption.map(bloomAt).getOrElse(Map.empty)
-
-  /** WRITE-TIME SORT ORDER (physical column names) in force at a version,
-    * carried forward in commit metadata like the bloom config. See
-    * [[setSortOrder]].
-    */
-  private def sortAt(v: Long): Seq[String] =
-    cachedCommit(v)._1.get("sort") match {
-      case Some(l: java.util.List[_]) => l.asScala.map(_.toString).toSeq
-      case _ => Nil
-    }
-
-  private def currentSort: Seq[String] =
-    listVersions(fs, logDir).lastOption.map(sortAt).getOrElse(Nil)
+  def constraints: Map[String, String] = metadata.constraints
 
   /** The live write-time sort order, keyed by LOGICAL column name. */
   def sortOrder: Seq[String] = {
-    val v = version
-    val cm = colmapAt(v)
-    val srt = sortAt(v)
-    val byPhys = schemaAt(v).fieldNames.toIndexedSeq
-      .map(l => physName(cm, l) -> l).toMap
-    srt.flatMap(byPhys.get)
+    val md = metadata
+    val byPhys = md.structType.fieldNames.toIndexedSeq
+      .map(l => md.physName(l) -> l).toMap
+    md.sort.flatMap(byPhys.get)
   }
 
   /** Declare a WRITE-TIME SORT ORDER in ONE metadata commit (the Iceberg
@@ -294,9 +212,9 @@ final class GraftTable private (
     * optimize stream-fed tables to recover the layout.
     */
   def setSortOrder(cols: Seq[String]): Long = {
-    val v = version
-    val schema = schemaAt(v)
-    val cm = colmapAt(v)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val schema = md.structType
     require(cols.distinct == cols, "duplicate sort columns")
     val phys = cols.map { l =>
       val f = schema.fields.find(_.name == l).getOrElse(
@@ -310,25 +228,16 @@ final class GraftTable private (
             "(orderable atomic columns only)")
         case _ => ()
       }
-      physName(cm, l)
+      md.physName(l)
     }
-    commit(v, "setSortOrder", Nil, Nil, newSort = Some(phys))
+    commit(snap, "setSortOrder", Nil, Nil, update = _.copy(sort = phys))
   }
-
-  /** The partition spec strings in force at a version (every commit
-    * carries them — see metaMap). Backs the stale-handle commit guard and
-    * [[setPartitioning]].
-    */
-  private def partitionByAt(v: Long): Seq[String] =
-    GraftTable.decodePartitionBy(cachedCommit(v)._1.get("partitionBy"))
 
   /** The live bloom-index config keyed by LOGICAL column name. */
   def bloomFilterColumns: Map[String, Long] = {
-    val v = version
-    val cm = colmapAt(v)
-    val bl = bloomAt(v)
-    schemaAt(v).fieldNames.toIndexedSeq
-      .flatMap(l => bl.get(physName(cm, l)).map(l -> _)).toMap
+    val md = metadata
+    md.structType.fieldNames.toIndexedSeq
+      .flatMap(l => md.bloom.get(md.physName(l)).map(l -> _)).toMap
   }
 
   /** Configure the table's bloom filter index in ONE metadata commit:
@@ -342,9 +251,9 @@ final class GraftTable private (
     * timestamp literals is not a probeable point domain here).
     */
   def setBloomFilter(cols: Map[String, Long]): Long = {
-    val v = version
-    val schema = schemaAt(v)
-    val cm = colmapAt(v)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val schema = md.structType
     val phys = cols.map { case (l, ndv) =>
       require(ndv > 0, s"expected NDV for '$l' must be positive, got $ndv")
       val f = schema.fields.find(_.name == l).getOrElse(throw new IllegalArgumentException(
@@ -356,9 +265,9 @@ final class GraftTable private (
           s"bloom filter on '$l': unsupported type ${dt.simpleString} " +
             "(integral, string and date columns only)")
       }
-      physName(cm, l) -> ndv
+      md.physName(l) -> ndv
     }
-    commit(v, "setBloomFilter", Nil, Nil, newBloom = Some(phys))
+    commit(snap, "setBloomFilter", Nil, Nil, update = _.copy(bloom = phys))
   }
 
   /** Per-(file, physical column) bloom bitsets, one entry per row group
@@ -406,26 +315,26 @@ final class GraftTable private (
         s"'${GraftTable.ReservedConstraintPrefix}' prefix (engine-internal " +
         "checks — generated-column validation, partition-scope guards — " +
         "live in that namespace)")
-    val v = version
-    val cur = constraintsAt(v)
+    val snap = snapshotAt()
+    val cur = snap.metadata.constraints
     require(!cur.contains(name),
       s"constraint '$name' already exists (${cur(name)})")
     val pred = expr(predicateSql) // resolution fails loud on bad references
-    val bad = labeled("constraint scan")(
-      snapshot().where(!coalesce(pred, lit(true))).limit(1).count())
+    val bad = labeled("constraint scan")(readFiles(snap.files, snap.metadata)
+      .where(!coalesce(pred, lit(true))).limit(1).count())
     require(bad == 0,
       s"cannot add constraint '$name': existing row(s) violate ($predicateSql)")
-    commit(v, "addConstraint", Nil, Nil,
-      newConstraints = Some(cur + (name -> predicateSql)))
+    commit(snap, "addConstraint", Nil, Nil,
+      update = _.copy(constraints = cur + (name -> predicateSql)))
   }
 
   /** Drop a CHECK constraint (metadata commit, loud when unknown). */
   def dropConstraint(name: String): Long = {
-    val v = version
-    val cur = constraintsAt(v)
+    val snap = snapshotAt()
+    val cur = snap.metadata.constraints
     require(cur.contains(name),
       s"no constraint '$name' (have: ${cur.keys.toSeq.sorted.mkString(", ")})")
-    commit(v, "dropConstraint", Nil, Nil, newConstraints = Some(cur - name))
+    commit(snap, "dropConstraint", Nil, Nil, update = _.copy(constraints = cur - name))
   }
 
   /** GENERATED ALWAYS AS columns of the current schema (name → generation
@@ -444,7 +353,7 @@ final class GraftTable private (
     * makes the column trustworthy for partition transforms and data
     * skipping.
     */
-  def generatedColumns: Map[String, String] = GraftTable.generatedOf(tableSchema)
+  def generatedColumns: Map[String, String] = GraftTable.generatedOf(metadata.structType)
 
   /** Resolve + vet a generation expression: must resolve over the base
     * (non-generated) columns only and be deterministic — a generated
@@ -491,21 +400,7 @@ final class GraftTable private (
     * row assigns it a fresh value (replace = delete + insert).
     */
   def identityColumns: Map[String, IdentitySpec] =
-    GraftTable.identityOf(tableSchema)
-
-  /** Identity high-water marks (name → furthest assigned value) at a
-    * version, carried in commit metadata like the column mapping.
-    */
-  private def idHwmAt(v: Long): Map[String, Long] =
-    cachedCommit(v)._1.get("idhwm") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala
-          .map { case (k, n) => k -> n.asInstanceOf[Number].longValue }.toMap
-      case _ => Map.empty
-    }
-
-  private def currentIdHwm: Map[String, Long] =
-    listVersions(fs, logDir).lastOption.map(idHwmAt).getOrElse(Map.empty)
+    GraftTable.identityOf(metadata.structType)
 
   /** Whether this table enforces UNIQUE merge keys on every write (opt-in
     * at create). The merge/CDF machinery ASSUMES snapshot-unique keys
@@ -517,20 +412,22 @@ final class GraftTable private (
     * write does not replace — at 100 TB a clustered key prunes that probe
     * to a sliver; a hash-spread key should carry a bloom index).
     */
-  def uniqueKeyEnforced: Boolean = keyCol.exists(k =>
-    tableSchema.fields.find(_.name == k).exists(f =>
+  def uniqueKeyEnforced: Boolean = uniqueKeyUnder(metadata)
+
+  private def uniqueKeyUnder(md: TableMetadata): Boolean = keyCol.exists(k =>
+    md.structType.fields.find(_.name == k).exists(f =>
       f.metadata.contains(GraftTable.KeyUniqueKey) &&
         f.metadata.getBoolean(GraftTable.KeyUniqueKey)))
 
   /** Validate `df` against the UNIQUE-key declaration (no-op when off):
     * in-batch duplicates and null keys are refused, then the key must not
-    * already exist in any surviving file (`excludePaths` = the files this
-    * write removes). Runs BEFORE anything is written — a violation
-    * commits nothing and writes nothing.
+    * already exist in any surviving file of `snap` (`excludePaths` = the
+    * files this write removes). Runs BEFORE anything is written — a
+    * violation commits nothing and writes nothing.
     */
-  private def requireUniqueKeys(df: DataFrame, excludePaths: Set[String],
-      what: String): Unit = {
-    if (!uniqueKeyEnforced) return
+  private def requireUniqueKeys(df: DataFrame, snap: Snapshot,
+      excludePaths: Set[String], what: String): Unit = {
+    if (!uniqueKeyUnder(snap.metadata)) return
     val k = keyCol.get
     val agg = labeled("unique-key probe")(
       df.agg(count(lit(1)).as("n"), count(col(k)).as("nn"),
@@ -543,14 +440,13 @@ final class GraftTable private (
       s"$what violates UNIQUE KEY '$k': " +
         s"${agg.getLong(1) - agg.getLong(2)} duplicate key(s) in the batch")
     if (agg.getLong(0) == 0) return
-    val v = version
-    val candidates = activeFiles(v)
+    val candidates = snap.files
       .filterNot(f => excludePaths.contains(f.path))
       .filter(f => f.rows > 0 &&
         f.stats.forall(_.intersects(agg.get(3), agg.get(4))))
     if (candidates.isEmpty) return
     val hits = labeled("unique-key existence")(
-      readFiles(candidates, v).select(col(k))
+      readFiles(candidates, snap.metadata).select(col(k))
         .join(df.select(col(k)).distinct(), Seq(k), "left_semi")
         .limit(1).count())
     require(hits == 0,
@@ -576,9 +472,11 @@ final class GraftTable private (
     * and cannot coalesce-compute, so a stream must SUPPLY generated
     * values exactly; a mismatch aborts the epoch like any CHECK).
     */
-  private[tables] def rowCheckSqls: Map[String, String] =
-    constraints ++ generatedColumns.map { case (n, e) =>
+  private[tables] def rowCheckSqls: Map[String, String] = {
+    val md = metadata
+    md.constraints ++ GraftTable.generatedOf(md.structType).map { case (n, e) =>
       s"${GraftTable.ReservedConstraintPrefix}generated_$n" -> s"$n <=> ($e)" }
+  }
 
   /** UPDATE-recompute semantics for generated columns (the Delta
     * behavior): an assignment set that writes a generated column's SOURCE
@@ -587,15 +485,17 @@ final class GraftTable private (
     * from the NEW values. Setting it explicitly (including to a value that
     * must match) is validated per row like any supplied value.
     */
-  private def withAutoGenerated(assigns: Map[String, Column]): Map[String, Column] =
-    assigns ++ generatedColumns.collect {
+  private def withAutoGenerated(assigns: Map[String, Column],
+      schema: StructType): Map[String, Column] =
+    assigns ++ GraftTable.generatedOf(schema).collect {
       case (n, e) if !assigns.contains(n) &&
           constraintRefs(e).exists(r => assigns.keys.exists(_.equalsIgnoreCase(r))) =>
         n -> lit(null)
     }
 
-  private def requireNoGeneratedOn(colName: String, op: String): Unit =
-    generatedColumns.foreach { case (n, sql) =>
+  private def requireNoGeneratedOn(colName: String, op: String,
+      schema: StructType): Unit =
+    GraftTable.generatedOf(schema).foreach { case (n, sql) =>
       require(n == colName || !constraintRefs(sql).exists(_.equalsIgnoreCase(colName)),
         s"cannot $op column '$colName': generated column '$n' ($sql) " +
           s"derives from it — drop '$n' first")
@@ -609,22 +509,20 @@ final class GraftTable private (
           a.nameParts.head
       }
 
-  private def requireNoConstraintOn(colName: String, op: String): Unit =
-    constraints.foreach { case (nm, sql) =>
+  private def requireNoConstraintOn(colName: String, op: String,
+      md: TableMetadata): Unit =
+    md.constraints.foreach { case (nm, sql) =>
       require(!constraintRefs(sql).exists(_.equalsIgnoreCase(colName)),
         s"cannot $op column '$colName': CHECK constraint '$nm' ($sql) " +
           "references it — drop the constraint first")
     }
-
-  private def physName(cm: Map[String, String], c: String): String =
-    cm.getOrElse(c, c)
 
   /** The logical schema with field names swapped to their physical names
     * (order and types unchanged — a positional rename away from logical).
     */
   private def physicalSchema(logical: StructType, cm: Map[String, String]): StructType =
     if (cm.isEmpty) logical
-    else StructType(logical.fields.map(f => f.copy(name = physName(cm, f.name))))
+    else StructType(logical.fields.map(f => f.copy(name = cm.getOrElse(f.name, f.name))))
 
   /** The stream faces read/write raw parquet against physical names —
     * resolved through a colmap the STREAM anchors at construction (not the
@@ -638,21 +536,22 @@ final class GraftTable private (
       cm: Map[String, String]): StructType = physicalSchema(logical, cm)
 
   /** The colmap in force right now (for streams to anchor / drift-check). */
-  private[tables] def colmapNow: Map[String, String] = currentColmap
+  private[tables] def colmapNow: Map[String, String] = metadata.colmap
 
-  /** Read table files under version `asOf`'s schema: physical names on the
-    * parquet scan (stable across renames), logical names on the result.
+  /** Read table files under the definition `md` of the version they belong
+    * to: physical names on the parquet scan (stable across renames),
+    * logical names on the result.
     * Each file's DELETION VECTOR is applied (merge-on-read). `withMeta`
     * additionally exposes the source file name / physical row position as
     * [[GraftTable.FileNameCol]] / [[GraftTable.RowIdxCol]] — the exact
     * touched-file and DV-position vocabulary the DML paths need.
     */
-  private def readFiles(files: Seq[AddFile], asOf: Long,
+  private def readFiles(files: Seq[AddFile], md: TableMetadata,
       withMeta: Boolean = false): DataFrame = {
-    val logical = schemaAt(asOf)
-    val phys = physicalSchema(logical, colmapAt(asOf))
-    val df = readPhysical(files, phys, withMeta, bucketSpecFor(files, asOf),
-      partitionLayoutFor(files, asOf))
+    val logical = md.structType
+    val phys = physicalSchema(logical, md.colmap)
+    val df = readPhysical(files, phys, withMeta, bucketSpecFor(files, md),
+      partitionLayoutFor(files, md))
     val outNames = logical.fieldNames.toIndexedSeq ++
       (if (withMeta) Seq(FileNameCol, RowIdxCol) else Nil)
     df.toDF(outNames: _*)
@@ -671,9 +570,9 @@ final class GraftTable private (
     * simply disables the claim: the read stays correct, it just shuffles
     * like an unbucketed one.
     */
-  private def bucketSpecFor(fset: Seq[AddFile], asOf: Long)
+  private def bucketSpecFor(fset: Seq[AddFile], md: TableMetadata)
       : Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = {
-    val byKey = partitionByAt(asOf)
+    val byKey = md.partitionBy
       .map(s => s -> PartitionTransforms.parse(s))
     byKey.collectFirst {
       case (key, b: PartitionTransforms.Bucket) => (key, b)
@@ -686,7 +585,7 @@ final class GraftTable private (
       }
       if (pure)
         Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
-          b.n, Seq(physName(colmapAt(asOf), b.sourceCol)), Nil))
+          b.n, Seq(md.physName(b.sourceCol)), Nil))
       else None
     }
   }
@@ -711,16 +610,15 @@ final class GraftTable private (
     * default-partition token conflates NULL and the empty string, which
     * pruning may treat as "unknown" but a substituting read must not.
     */
-  private def partitionLayoutFor(fset: Seq[AddFile], asOf: Long)
+  private def partitionLayoutFor(fset: Seq[AddFile], md: TableMetadata)
       : Option[(StructType, AddFile => org.apache.spark.sql.catalyst.InternalRow)] = {
     import org.apache.spark.sql.types._
-    val schema = schemaAt(asOf)
-    val cm = colmapAt(asOf)
-    val ids = partitionByAt(asOf).map(s => s -> PartitionTransforms.parse(s))
+    val schema = md.structType
+    val ids = md.partitionBy.map(s => s -> PartitionTransforms.parse(s))
       .collect { case (key, PartitionTransforms.Identity(c)) => (key, c) }
     if (ids.isEmpty || fset.isEmpty) return None
     val cols = ids.flatMap { case (key, c) =>
-      schema.fields.find(_.name == c).map(f => (key, physName(cm, c), f.dataType))
+      schema.fields.find(_.name == c).map(f => (key, md.physName(c), f.dataType))
     }
     if (cols.size != ids.size) return None
     val exactRoundTrip = cols.forall {
@@ -855,17 +753,11 @@ final class GraftTable private (
     }
   }
 
-  // pre-first-commit (inside create) the log is empty: use the
-  // construction-time schema
-  private def tableSchema: StructType =
-    listVersions(fs, logDir).lastOption.map(schemaAt)
-      .getOrElse(DataType.fromJson(schemaJson).asInstanceOf[StructType])
-
   /** The table's current schema (latest committed version's). */
-  def schema: StructType = tableSchema
+  def schema: StructType = metadata.structType
 
   // the streaming source plans batches straight off the commit log
-  private[tables] def commitActions(v: Long): (Map[String, Any], Seq[AddFile], Seq[String]) =
+  private[tables] def commitActions(v: Long): (TableMetadata, Seq[AddFile], Seq[String]) =
     cachedCommit(v)
 
   /** The table as a Structured Streaming micro-batch source (offsets =
@@ -883,8 +775,10 @@ final class GraftTable private (
     spark.readStream.format(classOf[GraftTableChangeFeedSource].getName)
       .option("path", location).load()
 
-  private def conf: Configuration = spark.sessionState.newHadoopConf()
-  private def fs: FileSystem = new Path(location).getFileSystem(conf)
+  // one Hadoop configuration and filesystem per handle: building a
+  // configuration copies every session setting
+  private lazy val conf: Configuration = spark.sessionState.newHadoopConf()
+  private lazy val fs: FileSystem = new Path(location).getFileSystem(conf)
   private def logDir = new Path(location, LogDirName)
 
   /** Label the Spark jobs an internal op submits (the guide's job-
@@ -921,30 +815,7 @@ final class GraftTable private (
   }
 
   /** Latest committed version (≥ 1 — creation is version 1). */
-  def version: Long = listVersions(fs, logDir).lastOption.getOrElse(
-    throw new IllegalStateException(s"no commits under $logDir"))
-
-  /** Active data files at `asOf` (defaults to latest): replay the log from
-    * the newest checkpoint at-or-before `asOf` (full replay when none) —
-    * cold snapshot assembly reads one checkpoint + the commit tail, not
-    * every commit since table creation.
-    */
-  private def activeFiles(asOf: Long): Seq[AddFile] = {
-    val all = listVersions(fs, logDir)
-    require(all.contains(asOf),
-      s"version $asOf does not exist under $logDir (have ${all.mkString(",")})")
-    val cp = listCheckpoints(fs, logDir).filter(_ <= asOf).lastOption
-    val active = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    cp.foreach { v =>
-      readCheckpoint(fs, logDir, v).foreach(a => active(a.path) = a)
-    }
-    all.filter(v => v <= asOf && cp.forall(v > _)).foreach { v =>
-      val (_, adds, removes) = cachedCommit(v)
-      removes.foreach(active.remove)
-      adds.foreach(a => active(a.path) = a)
-    }
-    active.values.toSeq
-  }
+  def version: Long = listLog(fs, logDir).latest(logDir)
 
   /** Snapshot read; `versionAsOf` replays the log to a past version (time
     * travel — valid until `vacuum()` reclaims the files it references, after
@@ -953,18 +824,21 @@ final class GraftTable private (
     * names the vacuumed files and the surviving horizon).
     */
   def snapshot(versionAsOf: Option[Long] = None): DataFrame = {
-    val asOf = versionAsOf.getOrElse(version)
-    val files = activeFiles(asOf)
-    if (versionAsOf.isDefined) {
-      val gone = missing(files.map(_.path))
-      if (gone.nonEmpty) throw new IllegalStateException(
-        s"version $asOf references ${gone.size} file(s) reclaimed by vacuum() " +
-          s"(e.g. ${gone.head}); time travel to it is no longer possible — " +
-          "the oldest fully-materialized version is the current one")
-    }
+    val snap = snapshotAt(versionAsOf)
+    if (versionAsOf.isDefined) requireNotVacuumed(snap.version, snap.files)
     // pre-evolution versions read with THEIR schema (and THEIR logical
     // names — physical resolution inside readFiles)
-    readFiles(files, asOf)
+    readFiles(snap.files, snap.metadata)
+  }
+
+  /** The loud vacuum contract of time travel: a past version whose files
+    * `vacuum()` reclaimed fails here, naming them, not mid-job.
+    */
+  private def requireNotVacuumed(v: Long, files: Seq[AddFile]): Unit = {
+    val gone = missing(files.map(_.path))
+    if (gone.nonEmpty) throw new IllegalStateException(
+      s"version $v references ${gone.size} file(s) reclaimed by vacuum() " +
+        s"(e.g. ${gone.head}); time travel to it is no longer possible")
   }
 
   /** Partition-pruned snapshot: `partitionPred` may reference ONLY the
@@ -987,22 +861,16 @@ final class GraftTable private (
       "snapshotWhere takes predicates over identity partition COLUMNS; " +
         "transform-partitioned tables prune point lookups on the source " +
         "column automatically through scan(pred)")
-    val asOf = versionAsOf.getOrElse(version)
-    val files = activeFiles(asOf)
-    val schema = schemaAt(asOf)
+    val snap = snapshotAt(versionAsOf)
     // files from a pre-evolution spec may lack the current partition keys:
     // they are KEPT unconditionally (the re-applied row filter below makes
     // the result exact) — partition evolution must never lose their rows
-    val (tupled, legacy) = files.partition(f => partitionBy.forall(f.pv.contains))
-    val kept = prunePartitions(tupled.map(_.pv).distinct, partitionPred, schema)
+    val (tupled, legacy) = snap.files.partition(f => partitionBy.forall(f.pv.contains))
+    val kept = prunePartitions(tupled.map(_.pv).distinct, partitionPred,
+      snap.metadata.structType)
     val sel = tupled.filter(f => kept(f.pv)) ++ legacy
-    if (versionAsOf.isDefined) { // same loud vacuum contract as snapshot()
-      val gone = missing(sel.map(_.path))
-      if (gone.nonEmpty) throw new IllegalStateException(
-        s"version $asOf references ${gone.size} file(s) reclaimed by vacuum() " +
-          s"(e.g. ${gone.head}); time travel to it is no longer possible")
-    }
-    readFiles(sel, asOf).where(partitionPred)
+    if (versionAsOf.isDefined) requireNotVacuumed(snap.version, sel)
+    readFiles(sel, snap.metadata).where(partitionPred)
   }
 
   /** Evaluate `pred` over the distinct partition tuples with Catalyst: build
@@ -1045,15 +913,10 @@ final class GraftTable private (
     * exist precisely to keep those ranges tight.
     */
   def scan(pred: Column, versionAsOf: Option[Long] = None): DataFrame = {
-    val asOf = versionAsOf.getOrElse(version)
-    val sel = scanCandidates(pred, asOf)
-    if (versionAsOf.isDefined) { // same loud vacuum contract as snapshot()
-      val gone = missing(sel.map(_.path))
-      if (gone.nonEmpty) throw new IllegalStateException(
-        s"version $asOf references ${gone.size} file(s) reclaimed by vacuum() " +
-          s"(e.g. ${gone.head}); time travel to it is no longer possible")
-    }
-    readFiles(sel, asOf).where(pred)
+    val snap = snapshotAt(versionAsOf)
+    val sel = candidates(pred, snap)
+    if (versionAsOf.isDefined) requireNotVacuumed(snap.version, sel)
+    readFiles(sel, snap.metadata).where(pred)
   }
 
   /** The candidate files a `scan(pred)` of version `asOf` would read:
@@ -1062,9 +925,12 @@ final class GraftTable private (
     * ([[BloomIndex]]). Package-private so specs pin the pruning itself,
     * not just result equality.
     */
-  private[tables] def scanCandidates(pred: Column, asOf: Long): Seq[AddFile] = {
-    val files = activeFiles(asOf)
-    val schema = schemaAt(asOf)
+  private[tables] def scanCandidates(pred: Column, asOf: Long): Seq[AddFile] =
+    candidates(pred, snapshotAt(Some(asOf)))
+
+  private def candidates(pred: Column, snap: Snapshot): Seq[AddFile] = {
+    val md = snap.metadata
+    val schema = md.structType
     // Resolve the predicate against the table schema by analyzing it over
     // an empty relation (also validates column references, loud), then
     // constant-fold so type-coercion casts around literals collapse back to
@@ -1087,9 +953,8 @@ final class GraftTable private (
     // a zero-row file (e.g. a create from an empty frame) can never hold a
     // match — drop it before interval analysis, it carries no stats to
     // prune on
-    val cm = colmapAt(asOf)
-    val sel = files.filter(_.rows > 0)
-      .filter(f => FilePruning.possible(predExpr, intervalsOf(f, schema, cm)))
+    val sel = snap.files.filter(_.rows > 0)
+      .filter(f => FilePruning.possible(predExpr, intervalsOf(f, md)))
     val pointLookups = BloomIndex.pointLookups(predExpr)
     // HIDDEN-PARTITIONING prune: an equality / IN conjunct on a transform's
     // SOURCE column admits only files whose logged partition value equals
@@ -1120,11 +985,11 @@ final class GraftTable private (
     // bloom refutation runs AFTER the interval pass (fewer footers to
     // probe) and ONLY when the predicate carries an equality conjunct on
     // an indexed column — any other scan pays nothing
-    val bl = bloomAt(asOf)
+    val bl = md.bloom
     if (bl.isEmpty) selP
     else {
       val lookups = pointLookups.flatMap { case (l, vs) =>
-        val p = physName(cm, l)
+        val p = md.physName(l)
         if (bl.contains(p)) Some(p -> vs) else None
       }
       if (lookups.isEmpty) selP
@@ -1157,12 +1022,11 @@ final class GraftTable private (
     * (and reordering) entirely.
     */
   private[tables] def estimatedScan(preds: Seq[Column], asOf: Long): (Long, Long) = {
-    val files = activeFiles(asOf)
-    val schema = schemaAt(asOf)
-    val cm = colmapAt(asOf)
-    val kept = preds.foldLeft(files.filter(_.rows > 0)) { (fs0, pred) =>
-      resolveJoined(pred, schema, StructType(Nil)) match {
-        case Some(p) => fs0.filter(f => FilePruning.possible(p, intervalsOf(f, schema, cm)))
+    val snap = snapshotAt(Some(asOf))
+    val md = snap.metadata
+    val kept = preds.foldLeft(snap.files.filter(_.rows > 0)) { (fs0, pred) =>
+      resolveJoined(pred, md.structType, StructType(Nil)) match {
+        case Some(p) => fs0.filter(f => FilePruning.possible(p, intervalsOf(f, md)))
         case None => fs0
       }
     }
@@ -1181,8 +1045,8 @@ final class GraftTable private (
     * values carry no interval — sound, since no interval means no pruning
     * on that column).
     */
-  private def intervalsOf(f: AddFile, schema: StructType,
-      cm: Map[String, String]): Map[String, KeyStats] = {
+  private def intervalsOf(f: AddFile, md: TableMetadata): Map[String, KeyStats] = {
+    val schema = md.structType
     val pvIv = f.pv.toSeq.flatMap { case (c, v) =>
       v.flatMap { s =>
         schema.fields.find(_.name == c).map(_.dataType) match {
@@ -1197,7 +1061,7 @@ final class GraftTable private (
       }
     }
     val logicalCs = schema.fieldNames.toIndexedSeq
-      .flatMap(l => f.cs.get(physName(cm, l)).map(l -> _)).toMap
+      .flatMap(l => f.cs.get(md.physName(l)).map(l -> _)).toMap
     logicalCs ++ keyCol.flatMap(k => f.stats.map(k -> _)) ++ pvIv
   }
 
@@ -1252,15 +1116,13 @@ final class GraftTable private (
     * files OUT of the candidate set directly.
     */
   private[tables] def mergeCandidateFiles(source: DataFrame,
-      extraOn: Option[Column], asOf: Option[Long] = None): Seq[AddFile] = {
+      extraOn: Option[Column], snap: Snapshot = snapshotAt()): Seq[AddFile] = {
     val k = keyCol.getOrElse(throw new IllegalArgumentException(
       "merge candidate pruning needs a table created with keyCol = Some(...)"))
-    // pinned by the caller (mergeInto passes ITS version so candidates,
-    // reads, and the commit CAS all see one snapshot even under a
-    // concurrent commit); default = latest, for the spec's direct pins
-    val v = asOf.getOrElse(version)
-    val files = activeFiles(v)
-    val schema = schemaAt(v)
+    // pinned by the caller (mergeInto passes ITS snapshot so candidates,
+    // reads, and the commit CAS all see one state even under a concurrent
+    // commit); default = latest, for the spec's direct pins
+    val schema = snap.metadata.structType
     val bounds = source.agg(min(col(k)), max(col(k))).head()
     val prefixedSchema = StructType(
       source.schema.fields.map(f => f.copy(name = s"__src_${f.name}")))
@@ -1285,9 +1147,9 @@ final class GraftTable private (
         (b.render, buckets)
     }
     if (bounds.isNullAt(0)) Seq.empty // empty source: no file can match
-    else files.filter(_.stats.forall(_.intersects(bounds.get(0), bounds.get(1))))
+    else snap.files.filter(_.stats.forall(_.intersects(bounds.get(0), bounds.get(1))))
       .filter(f => targetPrune.forall(p =>
-        f.rows == 0 || FilePruning.possible(p, intervalsOf(f, schema, colmapAt(v)))))
+        f.rows == 0 || FilePruning.possible(p, intervalsOf(f, snap.metadata))))
       .filter(f => bucketAdmit.forall { case (key, admit) =>
         f.pv.get(key) match {
           case Some(Some(s)) => admit(s)
@@ -1322,7 +1184,8 @@ final class GraftTable private (
   def replacePartitions(df: DataFrame): Long = {
     require(partitionBy.nonEmpty,
       "replacePartitions needs a partitioned table; use overwrite() otherwise")
-    val aligned = alignSchema(df)
+    val snap = snapshotAt()
+    val aligned = alignSchema(df, snap.metadata.structType)
     // O(distinct partitions) collect — the same bound the commit log holds;
     // the tuple values come from the SAME shadow expressions the writer
     // uses, so transform partitions replace whole transform cells
@@ -1335,19 +1198,19 @@ final class GraftTable private (
       .distinct().collect()
       .map(r => partSpecs.zipWithIndex
         .map { case (sp, i) => sp.render -> Option(r.getString(i)) }.toMap).toSet
-    val v = version
     // partition evolution makes "replace the whole partition" ambiguous for
     // files still laid out under an older spec — those files' rows may
     // belong to a touched cell without carrying its key. Loud, with the
     // migration path named.
-    val unmigrated = activeFiles(v).filter(_.rows > 0)
+    val unmigrated = snap.files.filter(_.rows > 0)
       .filterNot(f => partitionBy.forall(f.pv.contains))
     require(unmigrated.isEmpty,
       s"replacePartitions after partition evolution: ${unmigrated.size} " +
         "file(s) predate the current spec; optimize() first to migrate them")
-    val removes = activeFiles(v).filter(f => touched(f.pv)).map(_.path)
-    requireUniqueKeys(aligned, removes.toSet, "replacePartitions")
-    commit(v, "replacePartitions", writeData(aligned, idStrict = true), removes)
+    val removes = snap.files.filter(f => touched(f.pv)).map(_.path)
+    requireUniqueKeys(aligned, snap, removes.toSet, "replacePartitions")
+    commit(snap, "replacePartitions",
+      writeData(aligned, snap.metadata, idStrict = true), removes)
   }
 
   /** Row-level change feed between two versions: for every commit `v` in
@@ -1380,7 +1243,8 @@ final class GraftTable private (
       throw new IllegalArgumentException(
         "changes(classifyUpdates = true) needs a table created with keyCol " +
           "= Some(...) — update pairing happens on the merge key")))
-    val all = listVersions(fs, logDir)
+    val log = listLog(fs, logDir)
+    val all = log.versions
     require(fromVersion >= 0 && toVersion >= fromVersion,
       s"need 0 <= fromVersion <= toVersion, got ($fromVersion, $toVersion]")
     require(all.contains(toVersion) && (fromVersion == 0 || all.contains(fromVersion)),
@@ -1392,7 +1256,8 @@ final class GraftTable private (
       s"history before version ${all.headOption.getOrElse(0L)} has been " +
         s"expired; changes($fromVersion, …) is no longer reconstructible — " +
         s"the oldest available start is ${all.headOption.getOrElse(0L)}")
-    val outSchema = schemaAt(toVersion)
+    val mdTo = metadataAt(toVersion)
+    val outSchema = mdTo.structType
     // physical→logical under the TO version, built from the LIVE columns
     // only: a column renamed inside the range still unions into ONE output
     // column (physical identity is stable; per-version logical names would
@@ -1401,9 +1266,8 @@ final class GraftTable private (
     // name must never rebind to a same-named live column (re-added after a
     // drop, the live column has a FRESH physical name; the dead values
     // stay dead)
-    val cmTo = colmapAt(toVersion)
     val liveTo: Map[String, String] =
-      outSchema.fieldNames.toIndexedSeq.map(l => physName(cmTo, l) -> l).toMap
+      outSchema.fieldNames.toIndexedSeq.map(l => mdTo.physName(l) -> l).toMap
     def outNameOf(p: String): String = liveTo.getOrElse(p, s"__graft_dead_$p")
     // the diff of commit v needs each REMOVED file's full log entry as it
     // stood at v-1 (its deletion vector in particular: a DV-delete commit
@@ -1412,7 +1276,7 @@ final class GraftTable private (
     // from `fromVersion` once, O(range) instead of O(range × log replay)
     var act: Map[String, AddFile] =
       if (fromVersion == 0) Map.empty
-      else activeFiles(fromVersion).map(f => f.path -> f).toMap
+      else snapshotIn(log, Some(fromVersion)).files.map(f => f.path -> f).toMap
     val perVersion = all.filter(v => v > fromVersion && v <= toVersion).flatMap { v =>
       val (meta, adds, removes) = cachedCommit(v)
       val removedFiles = removes.map(p => act.getOrElse(p, AddFile(p, 0L, None)))
@@ -1423,7 +1287,7 @@ final class GraftTable private (
       // reading a single rewritten file (at 100 TB, a compacted table's
       // change feed must not re-diff every compaction; this also keeps
       // the feed reconstructible after such commits' inputs are vacuumed)
-      if (meta.get("dataChange").contains(false)) None
+      if (!meta.dataChange) None
       else Some {
         // removed files were active at v-1; the file set is O(commit), and
         // the schema each file was WRITTEN under may be older still —
@@ -1433,13 +1297,12 @@ final class GraftTable private (
           s"changes($fromVersion, $toVersion) needs ${gone.size} file(s) " +
             s"reclaimed by vacuum() (e.g. ${gone.head}); the feed for commit " +
             s"$v is no longer reconstructible")
-        def readAs(fset: Seq[AddFile], v: Long): DataFrame = {
-          val phys = physicalSchema(schemaAt(v), colmapAt(v))
+        val phys = physicalSchema(meta.structType, meta.colmap)
+        def readAs(fset: Seq[AddFile]): DataFrame =
           readPhysical(fset, phys, withMeta = false)
             .toDF(phys.fieldNames.toIndexedSeq.map(outNameOf): _*)
-        }
-        val added = readAs(adds, v)
-        val removed = readAs(removedFiles, v)
+        val added = readAs(adds)
+        val removed = readAs(removedFiles)
         // SINGLE-PASS NET DIFF. The multiset algebra here is exactly what
         // Catalyst's RewriteExceptAll lowers each `exceptAll` to (±1 tag →
         // union → aggregate over every column → sign filter → row
@@ -1506,12 +1369,12 @@ final class GraftTable private (
     } ++ Seq(col("_change"), col("_version").cast(LongType)): _*)
 
   /** The current snapshot's active files as logged (metadata only). */
-  private[tables] def currentFiles: Seq[AddFile] = activeFiles(version)
+  private[tables] def currentFiles: Seq[AddFile] = snapshotAt().files
 
   /** Active files at a version (metadata only) — the catalog's aggregate
     * pushdown answers COUNT/MIN/MAX from these O(files) log entries.
     */
-  private[tables] def filesAt(v: Long): Seq[AddFile] = activeFiles(v)
+  private[tables] def filesAt(v: Long): Seq[AddFile] = snapshotAt(Some(v)).files
 
   /** The logged zone-map interval of `colName` per CURRENT data file:
     * (path, physical rows, min, max) — the operational view of what data
@@ -1520,9 +1383,10 @@ final class GraftTable private (
     * (integral values parse as longs).
     */
   def fileRanges(colName: String): Seq[(String, Long, String, String)] = {
-    val v = version
-    activeFiles(v).flatMap(f =>
-      logicalStats(v, f, colName).map(ks => (f.path, f.rows, ks.min, ks.max)))
+    val snap = snapshotAt()
+    val phys = snap.metadata.physName(colName)
+    snap.files.flatMap(f =>
+      f.cs.get(phys).map(ks => (f.path, f.rows, ks.min, ks.max)))
   }
 
   /** How many data files a [[scan]] under `pred` would actually read after
@@ -1530,14 +1394,14 @@ final class GraftTable private (
     * prune?" probe (vs [[currentFiles]].size for the total). Driver
     * metadata only, O(files).
     */
-  def scanFileCount(pred: Column): Long = scanCandidates(pred, version).size.toLong
+  def scanFileCount(pred: Column): Long = candidates(pred, snapshotAt()).size.toLong
 
   /** A file's logged zone map for a LOGICAL column name at a version
     * (resolved through that version's column mapping — stats are keyed by
     * the stable physical names).
     */
   private[tables] def logicalStats(v: Long, f: AddFile, logical: String): Option[KeyStats] =
-    f.cs.get(physName(colmapAt(v), logical))
+    f.cs.get(metadataAt(v).physName(logical))
 
   /** The newest version whose commit timestamp is `<= tsMillis` — the
     * `TIMESTAMP AS OF` resolution rule (Delta semantics: you read the table
@@ -1545,12 +1409,11 @@ final class GraftTable private (
     * commit is loud). O(versions) over memoized log metadata.
     */
   def versionAt(tsMillis: Long): Long = {
-    val vs = listVersions(fs, logDir)
-    val at = vs.filter(v => cachedCommit(v)._1.get("ts")
-      .exists(_.asInstanceOf[Number].longValue <= tsMillis))
-    at.lastOption.getOrElse(throw new IllegalArgumentException(
-      s"no commit at or before timestamp $tsMillis; the table was created at " +
-        cachedCommit(vs.head)._1.get("ts").map(_.toString).getOrElse("?")))
+    val vs = listLog(fs, logDir).versions
+    vs.filter(metadataAt(_).ts <= tsMillis).lastOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"no commit at or before timestamp $tsMillis; the table was created at " +
+          metadataAt(vs.head).ts))
   }
 
   /** Commit metadata for every version, oldest first — one forward fold
@@ -1560,13 +1423,11 @@ final class GraftTable private (
     */
   def history: Seq[CommitInfo] = {
     var act = Map.empty[String, AddFile]
-    listVersions(fs, logDir).map { v =>
+    listLog(fs, logDir).versions.map { v =>
       val (meta, adds, removes) = cachedCommit(v)
       val rowsRemoved = removes.flatMap(act.get).map(liveRows).sum
       act = act -- removes ++ adds.map(a => a.path -> a)
-      CommitInfo(v, meta.getOrElse("op", "?").toString,
-        meta.get("ts").map(_.asInstanceOf[Number].longValue).getOrElse(0L),
-        adds.size, removes.size, adds.map(liveRows).sum,
+      CommitInfo(v, meta.op, meta.ts, adds.size, removes.size, adds.map(liveRows).sum,
         rowsRemoved, adds.map(_.bytes).sum)
     }
   }
@@ -1581,12 +1442,12 @@ final class GraftTable private (
     * so time travel keeps each version's own schema.
     */
   def append(df: DataFrame, mergeSchema: Boolean = false): Long = {
-    val v = version
-    val cur = schemaAt(v)
-    val validatedUnder = constraintsAt(v)
-    val (aligned, newSchema) = alignEvolving(df, cur, mergeSchema)
-    requireUniqueKeys(aligned, Set.empty, "append")
-    val adds = writeData(aligned, idStrict = true)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val cur = md.structType
+    val (aligned, newSchema) = alignEvolving(df, md, mergeSchema)
+    requireUniqueKeys(aligned, snap, Set.empty, "append")
+    val adds = writeData(aligned, md, idStrict = true)
     // OPTIMISTIC-CONCURRENCY retry (the Delta ConflictChecker design for
     // BLIND appends): an append reads nothing, so losing the version race
     // to another writer is not a logical conflict — the already-written
@@ -1598,24 +1459,24 @@ final class GraftTable private (
     // (commit's stale-handle guards) — each fails loud instead of retrying.
     // At 100 TB this is what lets a thousand ingest writers share a table
     // without serializing on anything but the log-rename itself.
-    var expected = v
+    var at = snap
     var attempt = 0
     while (true) {
-      try return commit(expected, "append", adds, Nil, None, Some(newSchema))
+      try return commit(at, "append", adds, Nil, update = _.copy(schema = newSchema.json))
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
           if (attempt >= 50) throw e
-          val head = version
-          requireConstraintsUnchanged(validatedUnder)
-          if (schemaAt(head).json != cur.json || colmapAt(head) != colmapAt(v))
+          val head = snapshotAt()
+          requireConstraintsUnchanged(md.constraints)
+          if (head.metadata.schema != md.schema || head.metadata.colmap != md.colmap)
             throw new IllegalStateException(
               "append lost the race to a concurrent schema change; the " +
                 "written files were laid out under the previous schema — " +
                 "re-run the append against the new definition")
           // identity values were assigned from the hwm at write time; a
           // winner that advanced it may have claimed the same values
-          if (GraftTable.identityOf(cur).nonEmpty && idHwmAt(head) != idHwmAt(v))
+          if (GraftTable.identityOf(cur).nonEmpty && head.metadata.idhwm != md.idhwm)
             throw new IllegalStateException(
               "append lost the race to a concurrent identity-assigning " +
                 "write; the assigned values could collide — re-run the append")
@@ -1624,18 +1485,17 @@ final class GraftTable private (
           // re-validate by re-running. Layout-only winners (compact/
           // optimize, dataChange=false) and empty commits cannot introduce
           // keys, so routine background maintenance rebases cleanly.
-          if (uniqueKeyEnforced) {
-            val rowBearing = ((expected + 1) to head).exists { w =>
+          if (uniqueKeyUnder(md)) {
+            val rowBearing = ((at.version + 1) to head.version).exists { w =>
               val (meta, wAdds, wRemoves) = cachedCommit(w)
-              !meta.get("dataChange").contains(false) &&
-                (wAdds.exists(_.rows > 0) || wRemoves.nonEmpty)
+              meta.dataChange && (wAdds.exists(_.rows > 0) || wRemoves.nonEmpty)
             }
             if (rowBearing) throw new IllegalStateException(
               "append lost the race on a UNIQUE KEY table to a concurrent " +
                 "row-changing commit; re-run the append so uniqueness " +
                 "re-validates against the new head")
           }
-          expected = head
+          at = head
       }
     }
     -1L // unreachable
@@ -1667,11 +1527,11 @@ final class GraftTable private (
     *     are checked for file overlap only — table-wide row content is
     *     unchanged, so a refuted file stays refuted;
     *   - concurrent CHECK-constraint changes fail LOUD when the op wrote
-    *     NEW row content (`checkConstraints` — the rows were validated
-    *     under the old set); layout-only rewrites skip the guard (their
-    *     rows were already validated by `addConstraint`'s full-table scan);
-    *   - concurrent schema / column-mapping changes fail LOUD when the
-    *     output encodes the schema (`checkSchema`); layout-only rewrites
+    *     NEW row content (`dataChange` — the rows were validated under the
+    *     old set); layout-only rewrites skip the guard (their rows were
+    *     already validated by `addConstraint`'s full-table scan);
+    *   - concurrent schema / column-mapping changes fail LOUD when the op
+    *     wrote new row content under the old schema; layout-only rewrites
     *     tolerate ADD COLUMN (their files null-fill by name exactly like
     *     the inputs did) — and a REPLACE/RESTORE winner is caught by file
     *     overlap, a partitioning or merge-key change by `commit`'s
@@ -1681,60 +1541,56 @@ final class GraftTable private (
     * background compaction share one table without serializing whole
     * operations on each other — only true logical conflicts surface.
     */
-  private def commitWithConflictCheck(readVersion: Long, op: String,
+  private def commitWithConflictCheck(read: Snapshot, op: String,
       adds: Seq[AddFile], removes: Seq[String],
       addsCouldMatch: AddFile => Boolean,
-      validatedUnder: Map[String, String],
-      newSchema: Option[StructType] = None,
       dataChange: Boolean = true,
-      checkConstraints: Boolean = true,
-      checkSchema: Boolean = true,
-      assignsIdentity: Boolean = false): Long = {
-    var expected = readVersion
+      assignsIdentity: Boolean = false,
+      update: TableMetadata => TableMetadata = identity): Long = {
+    val md = read.metadata
+    var at = read
     var attempt = 0
     while (true) {
-      try return commit(expected, op, adds, removes, None, newSchema,
-        dataChange = dataChange)
+      try return commit(at, op, adds, removes, dataChange = dataChange, update = update)
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
           if (attempt >= 50) throw e
-          val head = version
-          if (checkConstraints) requireConstraintsUnchanged(validatedUnder)
-          // an op that ASSIGNED identity values did so from readVersion's
-          // hwm — a winner advancing it may have claimed the same values
-          // (rewrites only carry existing values and pass false here)
-          if (assignsIdentity && idHwmAt(head) != idHwmAt(readVersion))
+          val head = snapshotAt()
+          if (dataChange) requireConstraintsUnchanged(md.constraints)
+          // an op that ASSIGNED identity values did so from the read
+          // version's hwm — a winner advancing it may have claimed the same
+          // values (rewrites only carry existing values and pass false here)
+          if (assignsIdentity && head.metadata.idhwm != md.idhwm)
             throw new IllegalStateException(
               s"$op lost the race to a concurrent identity-assigning " +
                 "write; the assigned values could collide — re-run")
-          if (checkSchema && (schemaAt(head).json != schemaAt(readVersion).json ||
-              colmapAt(head) != colmapAt(readVersion)))
+          if (dataChange && (head.metadata.schema != md.schema ||
+              head.metadata.colmap != md.colmap))
             throw new IllegalStateException(
               s"$op lost the race to a concurrent schema change; its output " +
                 "was computed under the previous schema — re-run against " +
                 "the new definition")
           val mine = removes.toSet
-          ((expected + 1) to head).foreach { w =>
+          ((at.version + 1) to head.version).foreach { w =>
             val (meta, wAdds, wRemoves) = cachedCommit(w)
-            val wOp = meta.getOrElse("op", "?").toString
             val overlap =
               (wRemoves.filter(mine) ++ wAdds.map(_.path).filter(mine)).distinct
             if (overlap.nonEmpty) throw new ConcurrentCommitException(
-              s"$op conflicts with concurrent '$wOp' (version $w): it " +
+              s"$op conflicts with concurrent '${meta.op}' (version $w): it " +
                 s"modified ${overlap.size} file(s) this operation rewrites " +
                 s"(e.g. ${overlap.head}) — re-run on a fresh snapshot")
-            if (!meta.get("dataChange").contains(false)) {
+            if (meta.dataChange) {
               val hot = wAdds.filter(a =>
                 a.rows > 0 && !mine(a.path) && addsCouldMatch(a))
               if (hot.nonEmpty) throw new ConcurrentCommitException(
-                s"$op conflicts with concurrent '$wOp' (version $w): it " +
+                s"$op conflicts with concurrent '${meta.op}' (version $w): it " +
                   s"added ${hot.size} file(s) whose rows this operation's " +
                   s"match predicate could reach (e.g. ${hot.head.path}) — " +
                   "re-run on a fresh snapshot")
             }
           }
-          expected = head
+          at = head
       }
     }
     -1L // unreachable
@@ -1749,8 +1605,9 @@ final class GraftTable private (
     */
   def addColumns(fields: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(fields.nonEmpty, "addColumns needs at least one column")
-    val v = version
-    val cur = schemaAt(v)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val cur = md.structType
     fields.foreach(f => require(!cur.fieldNames.contains(f.name),
       s"column '${f.name}' already exists in ${cur.fieldNames.mkString(",")}"))
     require(fields.map(_.name).distinct.size == fields.size, "duplicate new column names")
@@ -1760,15 +1617,14 @@ final class GraftTable private (
     // name through the mapping — re-adding a dropped column's name yields
     // an all-null column, never the dead values (the column-mapping
     // contract; spec-pinned)
-    val cm = colmapAt(v)
-    val unavailable = (cur.fieldNames.toSeq.map(physName(cm, _)) ++ retiredAt(v)).toSet
+    val unavailable = (cur.fieldNames.toSeq.map(md.physName) ++ md.retired).toSet
     val fresh = fields.collect {
       case f if unavailable.contains(f.name) =>
         f.name -> s"${f.name}_r${java.util.UUID.randomUUID().toString.replace("-", "").take(8)}"
     }.toMap
     val evolved = StructType(cur.fields.toIndexedSeq ++ fields.map(_.copy(nullable = true)))
-    commit(v, "addColumns", Nil, Nil, None, Some(evolved),
-      if (fresh.isEmpty) None else Some(cm ++ fresh))
+    commit(snap, "addColumns", Nil, Nil,
+      update = m => m.copy(schema = evolved.json, colmap = m.colmap ++ fresh))
   }
 
   /** DROP a column in ONE metadata-only commit (no file touched, O(1) at
@@ -1782,24 +1638,24 @@ final class GraftTable private (
     * tuples), and the last column cannot be dropped — all loud.
     */
   def dropColumn(name: String): Long = {
-    val v = version
-    val cur = schemaAt(v)
-    val cm = colmapAt(v)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val cur = md.structType
     require(cur.fieldNames.contains(name),
       s"no column '$name' in ${cur.fieldNames.mkString(",")}")
     require(!keyCol.contains(name), "cannot drop the merge key column")
     require(!partSourceCols.contains(name),
       "cannot drop a partition (source) column")
     require(cur.fields.length > 1, "cannot drop the table's last column")
-    requireNoConstraintOn(name, "drop")
-    requireNoGeneratedOn(name, "drop")
+    requireNoConstraintOn(name, "drop", md)
+    requireNoGeneratedOn(name, "drop", cur)
     val evolved = StructType(cur.fields.toIndexedSeq.filterNot(_.name == name))
-    commit(v, "dropColumn", Nil, Nil, None, Some(evolved), Some(cm - name),
-      Some((retiredAt(v) :+ physName(cm, name)).distinct),
+    val p = md.physName(name)
+    commit(snap, "dropColumn", Nil, Nil, update = m => m.copy(schema = evolved.json,
+      colmap = m.colmap - name, retired = (m.retired :+ p).distinct,
       // a dropped column's bloom/sort entries go with it (advisory
       // metadata — no guard needed, unlike constraints)
-      newBloom = Some(bloomAt(v) - physName(cm, name)),
-      newSort = Some(sortAt(v).filterNot(_ == physName(cm, name))))
+      bloom = m.bloom - p, sort = m.sort.filterNot(_ == p)))
   }
 
   /** Idempotent append for exactly-once streaming sinks: `txnId` (e.g.
@@ -1814,11 +1670,12 @@ final class GraftTable private (
     require(txnId.nonEmpty, "txnId must be non-empty")
     if (committedTxns.contains(txnId)) version
     else {
-      val v = version
-      val validatedUnder = constraintsAt(v)
-      val aligned = alignSchema(df)
-      requireUniqueKeys(aligned, Set.empty, "append")
-      try commit(v, "append", writeData(aligned, idStrict = true), Nil, Some(txnId))
+      val snap = snapshotAt()
+      val validatedUnder = snap.metadata.constraints
+      val aligned = alignSchema(df, snap.metadata.structType)
+      requireUniqueKeys(aligned, snap, Set.empty, "append")
+      try commit(snap, "append", writeData(aligned, snap.metadata, idStrict = true), Nil,
+        txn = Some(txnId))
       catch {
         case e: ConcurrentCommitException =>
           if (committedTxns.contains(txnId)) version
@@ -1863,9 +1720,9 @@ final class GraftTable private (
     var attempt = 0
     while (true) {
       attempt += 1
-      val v = version
+      val snap = snapshotAt()
       requireConstraintsUnchanged(validatedUnder)
-      try return commit(v, op, adds, Nil, txnId)
+      try return commit(snap, op, adds, Nil, txn = txnId)
       catch {
         case e: ConcurrentCommitException =>
           if (txnId.exists(committedTxns.contains)) return version
@@ -1875,29 +1732,28 @@ final class GraftTable private (
     -1L // unreachable
   }
 
-  private def txnOf(v: Long): Option[String] =
-    cachedCommit(v)._1.get("txn").flatMap(Option(_)).map(_.toString)
-
   private def committedTxns: Set[String] = {
-    val all = listVersions(fs, logDir)
+    val log = listLog(fs, logDir)
+    def txns(vs: Seq[Long]) = vs.flatMap(metadataAt(_).txn)
     // a txn-carrying checkpoint is COMPLETE for its prefix — scan only the
     // tail (and after history expiration the prefix commits are GONE, so
     // the carried set is the only record of their txns); a legacy
     // checkpoint without the line means nothing was expired: full scan
-    val carried = listCheckpoints(fs, logDir).lastOption
+    val carried = log.checkpoints.lastOption
       .flatMap(cp => readCheckpointTxns(fs, logDir, cp).map(cp -> _))
     carried match {
-      case Some((cp, txns)) => txns ++ all.filter(_ > cp).flatMap(txnOf)
-      case None => all.flatMap(txnOf).toSet
+      case Some((cp, carriedTxns)) => carriedTxns ++ txns(log.versions.filter(_ > cp))
+      case None => txns(log.versions).toSet
     }
   }
 
   /** Replace the whole table contents (snapshot-atomic). */
   def overwrite(df: DataFrame): Long = {
-    val v = version
-    val aligned = alignSchema(df)
-    requireUniqueKeys(aligned, activeFiles(v).map(_.path).toSet, "overwrite")
-    commit(v, "overwrite", writeData(aligned, idStrict = true), activeFiles(v).map(_.path))
+    val snap = snapshotAt()
+    val aligned = alignSchema(df, snap.metadata.structType)
+    val removes = snap.files.map(_.path)
+    requireUniqueKeys(aligned, snap, removes.toSet, "overwrite")
+    commit(snap, "overwrite", writeData(aligned, snap.metadata, idStrict = true), removes)
   }
 
   /** STATIC partition overwrite — the SQL `INSERT OVERWRITE … PARTITION
@@ -1918,9 +1774,9 @@ final class GraftTable private (
     require(partSpecs.forall(_.isInstanceOf[PartitionTransforms.Identity]),
       "overwriteWhere takes predicates over identity partition COLUMNS; " +
         "transform-partitioned tables reload whole cells via replacePartitions")
-    val v = version
-    val schema = schemaAt(v)
-    val files = activeFiles(v)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val files = snap.files
     // same partition-evolution guard as replacePartitions: a file laid out
     // under an older spec has no defined cell membership here
     val unmigrated = files.filter(_.rows > 0)
@@ -1930,20 +1786,20 @@ final class GraftTable private (
         "file(s) predate the current spec; optimize() first to migrate them")
     val kept = prunePartitions(
       files.filter(f => partitionBy.forall(f.pv.contains)).map(_.pv).distinct,
-      partitionPred, schema)
+      partitionPred, md.structType)
     val removes = files.filter(f => kept(f.pv)).map(_.path)
     // NULL-STRICT scope check (pred IS TRUE, not SQL-CHECK null-passes): a
     // row with a NULL partition value does not belong to the replaced
     // partitions, so letting it through would write it into the surviving
-    // null partition — duplicating rows the overwrite never removed
-    val scoped = constraints.toSeq.sortBy(_._1) :+
-      (s"${GraftTable.ReservedConstraintPrefix}overwrite_partition_scope" ->
-        s"coalesce(($predSql), false)")
-    val alignedOw = alignSchema(df)
-    requireUniqueKeys(alignedOw, removes.toSet, "partition overwrite")
-    val adds = writeData(alignedOw, consOverride = Some(scoped),
+    // null partition — duplicating rows the overwrite never removed. It
+    // rides this write as one more CHECK; the commit keeps the table's own
+    val scope = s"${GraftTable.ReservedConstraintPrefix}overwrite_partition_scope" ->
+      s"coalesce(($predSql), false)"
+    val alignedOw = alignSchema(df, md.structType)
+    requireUniqueKeys(alignedOw, snap, removes.toSet, "partition overwrite")
+    val adds = writeData(alignedOw, md.copy(constraints = md.constraints + scope),
       idStrict = true)
-    commit(v, "overwritePartitions", adds, removes)
+    commit(snap, "overwritePartitions", adds, removes)
   }
 
   /** Upsert by `keyCol`: target rows whose key appears in `source` are
@@ -1964,13 +1820,13 @@ final class GraftTable private (
     // read earlier than the pinned version could silently commit a stale
     // schema over a concurrent ADD/RENAME (the commit CAS only guards the
     // version read here)
-    val v = version
-    val cur = schemaAt(v)
+    val snap = snapshotAt()
+    val cur = snap.metadata.structType
     // a merge source must not carry a GENERATED ALWAYS identity column
     // (replaced rows would smuggle caller-chosen values past assignment)
     requireIdentityInsertable(source.columns.toSeq, cur,
       "supplied in a merge source")
-    val (src, evolved) = alignEvolving(source, cur, mergeSchema)
+    val (src, evolved) = alignEvolving(source, snap.metadata, mergeSchema)
     // ONE aggregate pass guards both invariants AND computes the prune
     // bounds: null keys (which the semi/anti joins would silently drop, and
     // which count_distinct would miscount as "duplicates"), duplicate keys
@@ -1987,7 +1843,6 @@ final class GraftTable private (
     require(uniq.getLong(1) == uniq.getLong(2),
       s"merge source has ${uniq.getLong(1) - uniq.getLong(2)} duplicate '$k' keys")
 
-    val files = activeFiles(v)
     // footer-stats prune: only files whose key range intersects the
     // source's key range can contain a matched key (lo/hi ride the same
     // aggregate row, positions 3/4)
@@ -1995,12 +1850,12 @@ final class GraftTable private (
     val (srcLo, srcHi) = if (srcEmpty) (null, null) else (uniq.get(3), uniq.get(4))
     val candidates =
       if (srcEmpty) Seq.empty // empty source: no file can match
-      else files.filter(_.stats.forall(_.intersects(srcLo, srcHi)))
+      else snap.files.filter(_.stats.forall(_.intersects(srcLo, srcHi)))
     // refine to files that ACTUALLY hold a matched key (one semi-join that
     // reads only pruned candidates; result is O(files), driver-safe)
     val touched: Set[String] =
       if (candidates.isEmpty) Set.empty
-      else labeled("merge touched-files")(readFiles(candidates, v, withMeta = true)
+      else labeled("merge touched-files")(readFiles(candidates, snap.metadata, withMeta = true)
         .select(col(k), col(FileNameCol))
         .join(src.select(col(k)).distinct(), Seq(k), "left_semi")
         .select(col(FileNameCol)).distinct()
@@ -2009,7 +1864,7 @@ final class GraftTable private (
 
     val survivors =
       if (rewritten.isEmpty) None
-      else Some(readFiles(rewritten, v)
+      else Some(readFiles(rewritten, snap.metadata)
         .join(src.select(col(k)), Seq(k), "left_anti")
         // rewritten files were read under the PRE-evolution schema; widen
         // survivors to the evolved width (new columns null) so the union
@@ -2019,16 +1874,16 @@ final class GraftTable private (
           else lit(null).cast(f.dataType).as(f.name)
         }: _*))
     val newData = survivors.fold(src)(_.unionByName(src))
-    val validatedUnder = constraintsAt(v)
     // a winner-added file whose key range the source's bounds intersect
     // could hold keys this merge decided about without seeing — conflict;
     // a file with no key stats can't be refuted (conservative)
     val couldMatch: AddFile => Boolean =
       if (srcEmpty) _ => false
       else f => f.stats.forall(_.intersects(srcLo, srcHi))
-    commitWithConflictCheck(v, "merge", writeData(newData),
-      rewritten.map(_.path), couldMatch, validatedUnder, Some(evolved),
-      assignsIdentity = GraftTable.identityOf(cur).nonEmpty)
+    commitWithConflictCheck(snap, "merge", writeData(newData, snap.metadata),
+      rewritten.map(_.path), couldMatch,
+      assignsIdentity = GraftTable.identityOf(cur).nonEmpty,
+      update = _.copy(schema = evolved.json))
   }
 
   /** GENERALIZED MERGE — the full conditional-clause surface on top of the
@@ -2077,7 +1932,9 @@ final class GraftTable private (
       "mergeInto needs a table created with keyCol = Some(...)"))
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "mergeInto needs at least one clause")
-    val schema = tableSchema
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val schema = md.structType
     (matched.flatMap(_._2).flatMap(_.keys) ++ notMatched.flatMap(_._2.keys) ++
         notMatchedBySource.flatMap(_._2).flatMap(_.keys))
       .foreach(c => require(schema.fieldNames.contains(c),
@@ -2097,15 +1954,14 @@ final class GraftTable private (
     require(uniq.getLong(1) == uniq.getLong(2),
       s"merge source has ${uniq.getLong(1) - uniq.getLong(2)} duplicate '$k' keys")
 
-    val v = version
-    val files = activeFiles(v)
+    val files = snap.files
     // source columns disambiguated as __src_<name> for every expression
     val prefixed = source.select(source.columns.toIndexedSeq.map(c =>
       col(c).as(s"__src_$c")): _*)
     val srcK = col(s"__src_$k")
     // the full match condition: key equality AND the compound-ON residue
     val matchCond = extraOn.fold(col(k) === srcK)(col(k) === srcK && _)
-    val candidates = mergeCandidateFiles(source, extraOn, Some(v))
+    val candidates = mergeCandidateFiles(source, extraOn, snap)
     // a NOT-MATCHED-BY-SOURCE clause can fire on any row of any file —
     // every active file becomes a rewrite candidate (the clause's
     // inherent cost); otherwise only files that HOLD a fully-matched row
@@ -2114,7 +1970,7 @@ final class GraftTable private (
       if (notMatchedBySource.nonEmpty) files
       else if (candidates.isEmpty) Seq.empty
       else {
-        val touched = readFiles(candidates, v, withMeta = true)
+        val touched = readFiles(candidates, md, withMeta = true)
           .join(prefixed, matchCond, "left_semi")
           .select(col(FileNameCol)).distinct()
           .collect().map(_.getString(0)).toSet
@@ -2137,10 +1993,10 @@ final class GraftTable private (
         // they touch (withAutoGenerated) — Delta's update-recompute rule
         val clauses: Seq[(Column, Option[Map[String, Column]])] =
           matched.map { case (c, a) =>
-            (srcK.isNotNull && c.getOrElse(lit(true)), a.map(withAutoGenerated)) } ++
+            (srcK.isNotNull && c.getOrElse(lit(true)), a.map(withAutoGenerated(_, schema))) } ++
           notMatchedBySource.map { case (c, a) =>
-            (srcK.isNull && c.getOrElse(lit(true)), a.map(withAutoGenerated)) }
-        val joined = readFiles(rewritten, v)
+            (srcK.isNull && c.getOrElse(lit(true)), a.map(withAutoGenerated(_, schema))) }
+        val joined = readFiles(rewritten, md)
           .join(prefixed, matchCond, "left")
           .withColumn("__action", actionIdx(clauses.map(_._1)))
         val deleteIdx = clauses.zipWithIndex.collect {
@@ -2174,7 +2030,7 @@ final class GraftTable private (
           if (candidates.isEmpty)
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               StructType(schema.fields.filter(f => needed.contains(f.name))))
-          else readFiles(candidates, v)
+          else readFiles(candidates, md)
             .select(needed.map(col): _*)
         val unmatched = prefixed.join(candRows, matchCond, "left_anti")
           .withColumn("__action",
@@ -2193,20 +2049,19 @@ final class GraftTable private (
       }
 
     (survivors, inserts) match {
-      case (None, None) => v // nothing touched, nothing to insert
+      case (None, None) => snap.version // nothing touched, nothing to insert
       case (s, i) =>
         val newData = (s.toSeq ++ i.toSeq).reduce(_.unionByName(_))
         // insert clauses may assign ANY key expression — under UNIQUE KEY
         // the merged output must still be globally unique
-        requireUniqueKeys(newData, rewritten.map(_.path).toSet, "merge")
-        val validatedUnder = constraintsAt(v)
+        requireUniqueKeys(newData, snap, rewritten.map(_.path).toSet, "merge")
         // source key bounds computed only if a race actually happens
         lazy val bounds = source.agg(min(col(k)), max(col(k))).head()
         val couldMatch: AddFile => Boolean = f =>
           !bounds.isNullAt(0) &&
             f.stats.forall(_.intersects(bounds.get(0), bounds.get(1)))
-        commitWithConflictCheck(v, "merge", writeData(newData),
-          rewritten.map(_.path), couldMatch, validatedUnder,
+        commitWithConflictCheck(snap, "merge", writeData(newData, md),
+          rewritten.map(_.path), couldMatch,
           assignsIdentity = GraftTable.identityOf(schema).nonEmpty)
     }
   }
@@ -2226,9 +2081,9 @@ final class GraftTable private (
     * dropped files). Position collection is bounded: only dv-classified
     * files' positions transit the driver, ≤ DvMaxPositionsPerFile each.
     */
-  private def routeDml(files: Seq[AddFile], v: Long, hit: Column,
+  private def routeDml(files: Seq[AddFile], md: TableMetadata, hit: Column,
       allowDrop: Boolean): (Seq[AddFile], Seq[AddFile], Seq[AddFile]) =
-    routeDmlMarked(files, v, _.where(hit), allowDrop)
+    routeDmlMarked(files, md, _.where(hit), allowDrop)
 
   /** [[routeDml]] generalized over how hits are MARKED: `mark` narrows a
     * snapshot frame to its matched rows — a predicate for deleteWhere/
@@ -2236,7 +2091,7 @@ final class GraftTable private (
     * a subquery may be arbitrarily large, so it must never become a
     * collected literal list).
     */
-  private def routeDmlMarked(files: Seq[AddFile], v: Long,
+  private def routeDmlMarked(files: Seq[AddFile], md: TableMetadata,
       mark: DataFrame => DataFrame,
       allowDrop: Boolean): (Seq[AddFile], Seq[AddFile], Seq[AddFile]) = {
     // ONE pass over the touched snapshot computes both routing inputs: the
@@ -2249,7 +2104,7 @@ final class GraftTable private (
     val posAgg = org.apache.spark.sql.functions
       .udaf(graft.functions.BoundedPosAgg(DvMaxPositionsPerFile))
     val hitInfo: Map[String, (Long, Option[Seq[Long]])] =
-      labeled("dml route")(mark(readFiles(files, v, withMeta = true))
+      labeled("dml route")(mark(readFiles(files, md, withMeta = true))
         .groupBy(col(FileNameCol)).agg(posAgg(col(RowIdxCol)).as("cp"))
         .select(col(FileNameCol), col("cp._1").as("n"), col("cp._2").as("pos"))
         .collect()).map { r =>
@@ -2291,21 +2146,20 @@ final class GraftTable private (
     * accumulated vectors by materializing the live rows.
     */
   def deleteWhere(cond: Column): Long = {
-    val v = version
-    val files = activeFiles(v)
-    if (files.isEmpty) return v
+    val snap = snapshotAt()
+    val md = snap.metadata
+    if (snap.files.isEmpty) return snap.version
     val hit = coalesce(cond, lit(false))
-    val (dvAdds, rewrite, dropped) = routeDml(files, v, hit, allowDrop = true)
-    if (dvAdds.isEmpty && rewrite.isEmpty && dropped.isEmpty) return v
-    val validatedUnder = constraintsAt(v)
+    val (dvAdds, rewrite, dropped) = routeDml(snap.files, md, hit, allowDrop = true)
+    if (dvAdds.isEmpty && rewrite.isEmpty && dropped.isEmpty) return snap.version
     val keepAdds =
       if (rewrite.isEmpty) Nil
-      else writeData(readFiles(rewrite, v).where(not(hit)), distribute = false)
+      else writeData(readFiles(rewrite, md).where(not(hit)), md, distribute = false)
     // predicate DML tolerates concurrent blind appends (rebased state ==
     // delete-first serial order, the WriteSerializable contract); only a
     // winner touching a file this delete rewrites/DVs/drops conflicts
-    commitWithConflictCheck(v, "delete", dvAdds ++ keepAdds,
-      (dvAdds ++ rewrite ++ dropped).map(_.path), _ => false, validatedUnder)
+    commitWithConflictCheck(snap, "delete", dvAdds ++ keepAdds,
+      (dvAdds ++ rewrite ++ dropped).map(_.path), _ => false)
   }
 
   /** KEYED DELETE (the `DELETE … WHERE col IN (SELECT …)` primitive, e.g.
@@ -2322,8 +2176,10 @@ final class GraftTable private (
     */
   def deleteMatching(keys0: DataFrame, on: String,
       residue: Column = lit(true)): Long = {
-    val v = version
-    val schema = schemaAt(v)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val v = snap.version
+    val schema = md.structType
     require(schema.fieldNames.contains(on),
       s"no column '$on' in ${schema.fieldNames.mkString(",")}")
     require(keys0.columns.length == 1,
@@ -2355,8 +2211,8 @@ final class GraftTable private (
     try {
       val bounds = keys.agg(min(col(kc)), max(col(kc))).head()
       if (bounds.isNullAt(0)) return v // empty key set: nothing can match
-      val phys = physName(colmapAt(v), on)
-      val files = activeFiles(v).filter { f =>
+      val phys = md.physName(on)
+      val files = snap.files.filter { f =>
         f.rows > 0 && f.cs.get(phys).forall(
           _.intersects(bounds.get(0), bounds.get(1)))
       }
@@ -2366,23 +2222,22 @@ final class GraftTable private (
       val mark: DataFrame => DataFrame =
         df => df.where(hitPred).join(keys, onCmp === col(kc), "left_semi")
       val (dvAdds, rewrite, dropped) =
-        routeDmlMarked(files, v, mark, allowDrop = true)
+        routeDmlMarked(files, md, mark, allowDrop = true)
       if (dvAdds.isEmpty && rewrite.isEmpty && dropped.isEmpty) return v
-      val validatedUnder = constraintsAt(v)
       val keepAdds =
         if (rewrite.isEmpty) Nil
         else {
           // survivors = NOT (residue AND member): one left join against the
           // distinct key frame marks membership without duplicating rows
-          val marked = readFiles(rewrite, v)
+          val marked = readFiles(rewrite, md)
             .join(keys.withColumn("__graft_in_hit", lit(true)),
               onCmp === col(kc), "left")
           writeData(marked
             .where(!(hitPred && coalesce(col("__graft_in_hit"), lit(false))))
-            .drop(kc, "__graft_in_hit"), distribute = false)
+            .drop(kc, "__graft_in_hit"), md, distribute = false)
         }
-      commitWithConflictCheck(v, "delete", dvAdds ++ keepAdds,
-        (dvAdds ++ rewrite ++ dropped).map(_.path), _ => false, validatedUnder)
+      commitWithConflictCheck(snap, "delete", dvAdds ++ keepAdds,
+        (dvAdds ++ rewrite ++ dropped).map(_.path), _ => false)
     } finally keys.unpersist()
   }
 
@@ -2399,21 +2254,22 @@ final class GraftTable private (
     */
   def update(assignments0: Map[String, Column], cond: Column): Long = {
     require(assignments0.nonEmpty, "update needs at least one assignment")
-    val schema = tableSchema
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val schema = md.structType
     assignments0.keys.foreach(k => require(schema.fieldNames.contains(k),
       s"update column '$k' not in ${schema.fieldNames.mkString(",")}"))
     requireIdentityInsertable(assignments0.keys.toSeq, schema, "assigned by UPDATE")
-    keyCol.filter(_ => uniqueKeyEnforced).foreach(k =>
+    keyCol.filter(_ => uniqueKeyUnder(md)).foreach(k =>
       require(!assignments0.contains(k),
         s"cannot reassign the UNIQUE merge key '$k' via UPDATE — " +
           "use merge (or delete + insert)"))
-    val assignments = withAutoGenerated(assignments0)
-    val v = version
-    val files = activeFiles(v)
-    if (files.isEmpty) return v
+    val assignments = withAutoGenerated(assignments0, schema)
+    val files = snap.files
+    if (files.isEmpty) return snap.version
     val hit = coalesce(cond, lit(false))
-    val (dvAdds, rewrite, _) = routeDml(files, v, hit, allowDrop = false)
-    if (dvAdds.isEmpty && rewrite.isEmpty) return v
+    val (dvAdds, rewrite, _) = routeDml(files, md, hit, allowDrop = false)
+    if (dvAdds.isEmpty && rewrite.isEmpty) return snap.version
     def applied(df: DataFrame, onlyHits: Boolean): DataFrame = {
       val base = if (onlyHits) df.where(hit) else df
       base.select(schema.fields.toIndexedSeq.map { f =>
@@ -2428,15 +2284,14 @@ final class GraftTable private (
     // versions append as fresh files. rewrite-routed files: full rewrite.
     val dvSrc = dvAdds.map(a => files.find(_.path == a.path).get)
     val pieces =
-      Seq(if (dvSrc.isEmpty) None else Some(applied(readFiles(dvSrc, v), onlyHits = true)),
-        if (rewrite.isEmpty) None else Some(applied(readFiles(rewrite, v), onlyHits = false)))
+      Seq(if (dvSrc.isEmpty) None else Some(applied(readFiles(dvSrc, md), onlyHits = true)),
+        if (rewrite.isEmpty) None else Some(applied(readFiles(rewrite, md), onlyHits = false)))
         .flatten
-    val validatedUnder = constraintsAt(v)
     val newAdds = if (pieces.isEmpty) Nil
-      else writeData(pieces.reduce(_.unionByName(_)), distribute = false)
+      else writeData(pieces.reduce(_.unionByName(_)), md, distribute = false)
     // same WriteSerializable contract as deleteWhere: blind appends rebase
-    commitWithConflictCheck(v, "update", dvAdds ++ newAdds,
-      (dvAdds ++ rewrite).map(_.path), _ => false, validatedUnder)
+    commitWithConflictCheck(snap, "update", dvAdds ++ newAdds,
+      (dvAdds ++ rewrite).map(_.path), _ => false)
   }
 
   /** Coalesce small files — the operational fix for the small-files
@@ -2451,23 +2306,23 @@ final class GraftTable private (
     */
   def compact(smallFileBytes: Long = 32L << 20, targetBytes: Long = 128L << 20): Long = {
     require(smallFileBytes > 0 && targetBytes > 0, "thresholds must be positive")
-    val v = version
+    val snap = snapshotAt()
     // a file carrying a deletion vector is always a candidate regardless of
     // size: compaction is what PURGES accumulated vectors (the rewrite
     // materializes the live rows, so subsequent reads drop the anti-join)
-    val small = activeFiles(v).filter(f => f.bytes < smallFileBytes || f.dv.isDefined)
-    if (small.size < 2 && !small.exists(_.dv.isDefined)) return v
+    val small = snap.files.filter(f => f.bytes < smallFileBytes || f.dv.isDefined)
+    if (small.size < 2 && !small.exists(_.dv.isDefined)) return snap.version
     val nOut = math.max(1L, (small.map(_.bytes).sum + targetBytes - 1) / targetBytes).toInt
-    val merged = readFiles(small, v).coalesce(nOut)
+    val merged = readFiles(small, snap.metadata).coalesce(nOut)
     // maintenance must not die to unrelated ingest: a concurrent blind
     // append rebases (the new small files just miss this compaction); only
     // a winner touching a compaction INPUT conflicts. Rows are unchanged
     // table-wide, so neither the constraint nor the schema guard applies
     // (a concurrent ADD CONSTRAINT validated these very rows; ADD COLUMN
     // null-fills the rewrite exactly like its inputs).
-    commitWithConflictCheck(v, "compact", writeData(merged, distribute = false),
-      small.map(_.path), _ => false, Map.empty, dataChange = false,
-      checkConstraints = false, checkSchema = false)
+    commitWithConflictCheck(snap, "compact",
+      writeData(merged, snap.metadata, distribute = false),
+      small.map(_.path), _ => false, dataChange = false)
   }
 
   /** OPTIMIZE: rewrite every active data file CLUSTERED on `clusterBy`, in
@@ -2520,7 +2375,9 @@ final class GraftTable private (
       "optimize clusters on 1 (range sort) to 4 (z-order) columns")
     require(clusterBy.distinct == clusterBy, "duplicate cluster columns")
     require(targetBytes > 0, "targetBytes must be positive")
-    val schema = tableSchema
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val schema = md.structType
     val types = clusterBy.map { c =>
       val dt = schema.fields.find(_.name == c).map(_.dataType).getOrElse(
         throw new IllegalArgumentException(
@@ -2542,20 +2399,19 @@ final class GraftTable private (
       dt
     }
     val integral = Seq(ByteType, ShortType, IntegerType, LongType)
-    val v = version
     // OPTIMIZE WHERE: with a partition predicate, only the selected
     // partitions' files are rewritten (driver-side prune over the log's
     // partition tuples, same machinery as snapshotWhere) — at 100 TB you
     // optimize the day that just closed, not three years
     val files0 = partitionPred match {
-      case None => activeFiles(v)
+      case None => snap.files
       case Some(pred) =>
         require(partitionBy.nonEmpty,
           "optimize with a partition predicate needs a partitioned table")
         require(partSpecs.forall(_.isInstanceOf[PartitionTransforms.Identity]),
           "optimize's partition predicate addresses identity partition " +
             "columns; on a transform-partitioned table optimize without it")
-        val all = activeFiles(v)
+        val all = snap.files
         // pre-evolution files (no current partition keys) are INCLUDED in
         // the rewrite: optimize is how old-spec files migrate to the
         // current layout (rows unchanged — layout-only)
@@ -2565,14 +2421,14 @@ final class GraftTable private (
     }
     // incremental: skip files a prior optimize stamped with this exact
     // spec — physical names, so the mark survives renames with the policy
-    val physSpec = clusterBy.map(physName(colmapAt(v), _))
+    val physSpec = clusterBy.map(md.physName)
     val files =
       if (!onlyUnclustered) files0
       else files0.filterNot(_.cb.contains(physSpec))
-    if (files.isEmpty) return v
+    if (files.isEmpty) return snap.version
     val nOut = math.max(1L,
       (files.map(_.bytes).sum + targetBytes - 1) / targetBytes).toInt
-    val df = readFiles(files, v)
+    val df = readFiles(files, md)
     val clustered = clusterBy match {
       case Seq(c) =>
         df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
@@ -2604,12 +2460,10 @@ final class GraftTable private (
     // long-running OPTIMIZE — at 100 TB the clustering rewrite takes long
     // enough that ingest WILL land during it. Outputs are STAMPED with the
     // spec that produced them so a later incremental run can skip them.
-    commitWithConflictCheck(v, "optimize",
-      writeData(clustered, distribute = false)
+    commitWithConflictCheck(snap, "optimize",
+      writeData(clustered, md, distribute = false)
         .map(_.copy(cb = Some(physSpec))),
-      files.map(_.path),
-      _ => false, Map.empty, dataChange = false,
-      checkConstraints = false, checkSchema = false)
+      files.map(_.path), _ => false, dataChange = false)
   }
 
   /** Z-value from 8-bit RANKS: per dimension, ~255 order-statistic
@@ -2669,38 +2523,38 @@ final class GraftTable private (
     * the revived data against them (enforcement is write-time).
     */
   def restore(versionAsOf: Long): Long = {
-    val v = version
-    require(versionAsOf != v, s"table is already at version $v")
-    val target = activeFiles(versionAsOf) // loud if the version is unknown
+    val snap = snapshotAt()
+    require(versionAsOf != snap.version, s"table is already at version ${snap.version}")
+    val back = snapshotAt(Some(versionAsOf)) // loud if the version is unknown
+    val target = back.files
     val gone = missing(target.map(_.path))
     if (gone.nonEmpty) throw new IllegalStateException(
       s"restore to version $versionAsOf needs ${gone.size} file(s) reclaimed " +
         s"by vacuum() (e.g. ${gone.head}); that version is no longer " +
         "materializable")
-    val cur = activeFiles(v)
+    val cur = snap.files
     val curByPath = cur.map(f => f.path -> f).toMap
     val targetByPath = target.map(f => f.path -> f).toMap
     // a column DROPPED after `versionAsOf` is revived by the restore: its
     // physical binding is live again, so it must leave the retired list —
     // otherwise the commit invariant would (wrongly) refuse the restore
-    val restoredSchema = schemaAt(versionAsOf)
-    val restoredCm = colmapAt(versionAsOf)
-    val revived = restoredSchema.fieldNames.toSeq.map(physName(restoredCm, _)).toSet
+    val restored = back.metadata
+    val revived = restored.structType.fieldNames.toSeq.map(restored.physName).toSet
     // diff by FULL entry, not by path: a file present in both versions with
     // a different deletion vector (or stats) must be re-added with the
     // target version's entry — a path-level diff would silently keep the
     // current vector and the restore would not bring the rows back
     // (remove + re-add of one path in one commit = replace)
-    commit(v, "restore",
+    commit(snap, "restore",
       target.filterNot(f => curByPath.get(f.path).contains(f)),
       cur.filterNot(f => targetByPath.get(f.path).contains(f)).map(_.path),
-      None, Some(restoredSchema), Some(restoredCm),
-      Some(retiredAt(v).filterNot(revived.contains)),
-      // bloom/sort config is write POLICY, not data state: it carries
-      // forward across the restore, minus entries whose column the
-      // restored schema no longer has
-      newBloom = Some(bloomAt(v).view.filterKeys(revived.contains).toMap),
-      newSort = Some(sortAt(v).filter(revived.contains)))
+      update = m => m.copy(schema = restored.schema, colmap = restored.colmap,
+        retired = m.retired.filterNot(revived.contains),
+        // bloom/sort config is write POLICY, not data state: it carries
+        // forward across the restore, minus entries whose column the
+        // restored schema no longer has
+        bloom = m.bloom.view.filterKeys(revived.contains).toMap,
+        sort = m.sort.filter(revived.contains)))
   }
 
   /** A constraint predicate must RESOLVE against the given schema (loud
@@ -2739,46 +2593,39 @@ final class GraftTable private (
       s"keyCol $k not in ${df.columns.mkString(",")}"))
     PartitionTransforms.validate(
       newPartitionBy.map(PartitionTransforms.parse), df.schema)
-    val v = version
+    val snap = snapshotAt()
     val newSchema = df.schema
-    val cons = newConstraints.toSeq.sortBy(_._1)
-    cons.foreach { case (n, sql) => validateConstraintSql(n, sql, newSchema) }
+    newConstraints.foreach { case (n, sql) => validateConstraintSql(n, sql, newSchema) }
     // physical bindings retired by the OLD lineage stay unavailable (their
     // values live on in time-travelable files): a new column with such a
     // name gets a fresh physical through the mapping
-    val retired = retiredAt(v)
+    val retired = snap.metadata.retired
     val cm = newSchema.fieldNames.toIndexedSeq.collect {
       case n if retired.contains(n) =>
         n -> s"${n}_r${UUID.randomUUID().toString.replace("-", "").take(8)}"
     }.toMap
-    // write the new data under the NEW definition while the log still
-    // carries the old one — the swap is the one commit below
-    val t2 = new GraftTable(location, spark, newKeyCol, newSchema.json, newPartitionBy)
     GraftTable.generatedOf(newSchema).foreach { case (n, e) =>
-      t2.validateGeneratedSql(n, e, newSchema) }
+      validateGeneratedSql(n, e, newSchema) }
     GraftTable.vetIdentityTypes(newSchema)
-    val adds = t2.writeData(df.select(newSchema.fieldNames.toIndexedSeq.map(col): _*),
-      consOverride = Some(cons), colmapOverride = Some(cm),
-      statsSchemaOverride = Some(newSchema),
-      keyColOverride = Some(newKeyCol), partitionByOverride = Some(newPartitionBy),
-      bloomOverride = Some(Map.empty), // a REPLACE defines a fresh table
-      genOverride = Some(GraftTable.generatedOf(newSchema)),
-      idOverride = Some(GraftTable.identityOf(newSchema)), idStrict = true,
-      sortOverride = Some(Nil))
-    commit(v, "replace", adds, activeFiles(v).map(_.path),
-      newSchema = Some(newSchema), newColmap = Some(cm),
-      newRetired = Some(retired), newConstraints = Some(newConstraints),
-      newKeyCol = Some(newKeyCol), newPartitionBy = Some(newPartitionBy),
-      newBloom = Some(Map.empty), newSort = Some(Nil),
-      newNdv = Some(Map.empty)) // stats describe the REPLACED data
+    // the NEW definition: bloom / sort / ndv start empty (a REPLACE defines
+    // a fresh table; stats described the replaced data), identity
+    // high-water marks carry over so no value is ever reused. The data is
+    // written under it while the log still carries the old one — the swap
+    // is the one commit below
+    val replaced = snap.metadata.copy(keyCol = newKeyCol, schema = newSchema.json,
+      partitionBy = newPartitionBy, colmap = cm, constraints = newConstraints,
+      bloom = Map.empty, ndv = Map.empty, sort = Nil)
+    val adds = writeData(df.select(newSchema.fieldNames.toIndexedSeq.map(col): _*),
+      replaced, idStrict = true)
+    commit(snap, "replace", adds, snap.files.map(_.path), update = _ => replaced)
   }
 
   /** EXPIRE HISTORY: physically delete the commit-log files (and
     * checkpoints) of every version BELOW `beforeVersion`, bounding the
     * log's storage and listing cost — at 100 TB commit rates (streaming
     * epochs, per-merge commits) an unbounded log is itself a scale bug:
-    * snapshot assembly already reads checkpoint + tail, but `listVersions`
-    * and the log's footprint grow O(commits) forever without this.
+    * snapshot assembly already reads checkpoint + tail, but the log's
+    * listing and footprint grow O(commits) forever without this.
     *
     * `beforeVersion` is first made SELF-SUFFICIENT: a checkpoint carrying
     * its full active-file state AND the accumulated exactly-once txn ids
@@ -2791,7 +2638,8 @@ final class GraftTable private (
     * metadata + storage. Returns the number of expired commits.
     */
   def expireHistory(beforeVersion: Long, dryRun: Boolean = false): Int = {
-    val all = listVersions(fs, logDir)
+    val log = listLog(fs, logDir)
+    val all = log.versions
     require(all.contains(beforeVersion),
       s"version $beforeVersion does not exist (have ${all.head}..${all.last})")
     // a live TAG pins its version readable: expiring past it would break
@@ -2812,15 +2660,16 @@ final class GraftTable private (
     // set; a legacy txn-less checkpoint at the horizon is replaced (its
     // content is a pure function of the log prefix, plus the txns line)
     val txns = committedTxns
+    val files = snapshotIn(log, Some(beforeVersion)).files
     val cpP = checkpointPath(logDir, beforeVersion)
     if (fs.exists(cpP) &&
         txns.nonEmpty && readCheckpointTxns(fs, logDir, beforeVersion).isEmpty)
       fs.delete(cpP, false)
     if (!fs.exists(cpP))
-      writeCheckpoint(fs, logDir, beforeVersion, activeFiles(beforeVersion), txns)
+      writeCheckpoint(fs, logDir, beforeVersion, files, txns)
     require(fs.exists(cpP), s"could not materialize checkpoint at $beforeVersion")
     victims.foreach(v => fs.delete(logPath(logDir, v), false))
-    listCheckpoints(fs, logDir).filter(_ < beforeVersion)
+    log.checkpoints.filter(_ < beforeVersion)
       .foreach(v => fs.delete(checkpointPath(logDir, v), false))
     victims.size
   }
@@ -2845,14 +2694,14 @@ final class GraftTable private (
     * `compact()`/`optimize()` on the clone to cut the dependency.
     */
   def cloneTo(dest: String, versionAsOf: Option[Long] = None): GraftTable =
-    cloneInternal(dest, versionAsOf.getOrElse(version), "clone", Map.empty)
+    cloneInternal(dest, snapshotAt(versionAsOf), "clone", branchPoint = None)
 
-  private def cloneInternal(dest: String, asOf: Long, op: String,
-      extraMeta: Map[String, Any]): GraftTable = {
-    val files = activeFiles(asOf)
+  private def cloneInternal(dest: String, snap: Snapshot, op: String,
+      branchPoint: Option[Long]): GraftTable = {
+    val files = snap.files
     val gone = missing(files.map(_.path))
     if (gone.nonEmpty) throw new IllegalStateException(
-      s"clone of version $asOf needs ${gone.size} file(s) reclaimed by " +
+      s"clone of version ${snap.version} needs ${gone.size} file(s) reclaimed by " +
         s"vacuum() (e.g. ${gone.head})")
     val rootQ = fs.makeQualified(new Path(location))
     val refs = files.map(f => f.copy(path =
@@ -2862,23 +2711,18 @@ final class GraftTable private (
     val dfs = destPath.getFileSystem(conf)
     val destLog = new Path(destPath, LogDirName)
     require(!dfs.exists(destLog), s"table already exists at $dest")
-    dfs.mkdirs(destLog)
-    // the clone inherits the source's sticky features (its referenced
-    // files may carry DVs, its schema the declarations); a BRANCH
-    // additionally declares the 'branches' writer feature on ITS log —
-    // an engine without branch support must not commit into a branch dir
-    // (it could not publish or respect the publish protocol)
-    val cloneFeatures = {
-      val (r, w) = featuresAt(asOf)
-      (r, if (extraMeta.contains("branchPoint")) w + "branches" else w)
-    }
-    writeCommit(dfs, destLog, 1L,
-      metaMap(op, keyCol, schemaAt(asOf).json, None, partitionBy,
-        colmapAt(asOf), retiredAt(asOf), constraintsAt(asOf),
-        bloom = bloomAt(asOf), idHwm = idHwmAt(asOf),
-        sort = sortAt(asOf), priorFeatures = cloneFeatures,
-        adds = refs) ++ extraMeta,
-      refs, Nil)
+    // the clone inherits the source's definition and sticky features (its
+    // referenced files may carry DVs, its schema the declarations), not its
+    // ANALYZE statistics; a BRANCH additionally declares the 'branches'
+    // writer feature on ITS log — an engine without branch support must
+    // not commit into a branch dir (it could not publish or respect the
+    // publish protocol)
+    val md = snap.metadata
+    createLog(dfs, destLog, withImpliedFeatures(md.copy(op = op,
+      ts = System.currentTimeMillis(), keyCol = keyCol, partitionBy = partitionBy,
+      txn = None, ndv = Map.empty, dataChange = true, branchPoint = branchPoint,
+      writerFeatures = md.writerFeatures ++ branchPoint.map(_ => "branches")),
+      refs), refs)
     GraftTable.at(spark, dest)
   }
 
@@ -2920,14 +2764,14 @@ final class GraftTable private (
     require(!location.contains(s"/${GraftTable.BranchDirName}/"),
       "cannot branch a branch: publish or drop this branch first, then " +
         "branch the main table")
-    val v = version
+    val snap = snapshotAt()
     require(!fs.exists(branchDir(name)),
       s"branch '$name' already exists (drop it or pick another name)")
     require(!fs.exists(tagPath(name)),
       s"a tag is named '$name' — VERSION AS OF '<name>' would be " +
         "ambiguous; dropTag it or pick another branch name")
-    cloneInternal(branchDir(name).toString, v, "createBranch",
-      Map("branchPoint" -> v))
+    cloneInternal(branchDir(name).toString, snap, "createBranch",
+      branchPoint = Some(snap.version))
   }
 
   /** Open an existing branch as a table handle (its own log/history).
@@ -2946,9 +2790,8 @@ final class GraftTable private (
 
   /** The main-table version a branch was cut at. */
   def branchPoint(name: String): Long =
-    branch(name).cachedCommit(1L)._1.get("branchPoint")
-      .map(_.asInstanceOf[Number].longValue).getOrElse(
-        throw new IllegalStateException(s"'$name' is not a branch (no branch point)"))
+    branch(name).metadataAt(1L).branchPoint.getOrElse(
+      throw new IllegalStateException(s"'$name' is not a branch (no branch point)"))
 
   /** Drop an (unpublished) branch: its local files and log go with it.
     * Replays a crashed publish first, so files a crashed attempt moved
@@ -2978,24 +2821,24 @@ final class GraftTable private (
     */
   def fastForward(name: String): Long = {
     val b = branch(name)
-    val bHead = b.version
+    val bSnap = b.snapshotAt()
     val bp = branchPoint(name)
-    val head = version
-    require(head == bp,
+    val snap = snapshotAt()
+    require(snap.version == bp,
       s"cannot fast-forward '$name': main advanced from version $bp to " +
-        s"$head since the branch was cut — re-branch from the new head " +
-        "and re-apply the changes")
+        s"${snap.version} since the branch was cut — re-branch from the new " +
+        "head and re-apply the changes")
     // DDL parity: a publish carries data, not definitions — and not write
     // POLICY either (bloom/sort config changed on the branch would
     // otherwise vanish silently in the diff-publish)
-    require(b.schemaAt(bHead).json == schemaAt(bp).json &&
-        b.colmapAt(bHead) == colmapAt(bp) &&
-        b.constraintsAt(bHead) == constraintsAt(bp) &&
+    val (bm, m) = (bSnap.metadata, snap.metadata)
+    require(bm.structType == m.structType && bm.colmap == m.colmap &&
+        bm.constraints == m.constraints &&
         b.keyCol == keyCol && b.partitionBy == partitionBy,
       s"cannot fast-forward '$name': the branch changed the table " +
         "DEFINITION (schema/column mapping/constraints/key/partitioning); " +
         "apply DDL on the main table, then re-branch")
-    require(b.bloomAt(bHead) == bloomAt(bp) && b.sortAt(bHead) == sortAt(bp),
+    require(bm.bloom == m.bloom && bm.sort == m.sort,
       s"cannot fast-forward '$name': the branch changed write policy " +
         "(bloom index / sort order) — a diff-publish cannot carry it; " +
         "apply the policy on the main table, then re-branch")
@@ -3007,8 +2850,8 @@ final class GraftTable private (
       if (!p.contains("/")) None // branch-local
       else if (p.startsWith(rootQ + "/")) Some(p.substring(rootQ.length + 1))
       else Some(p) // inherited absolute ref beyond this root (re-clone)
-    val bFiles = b.filesAt(bHead)
-    val mainNow = activeFiles(bp).map(f => f.path -> f).toMap
+    val bFiles = bSnap.files
+    val mainNow = snap.files.map(f => f.path -> f).toMap
     // CRASH SAFETY: record the publish intent (branch point + every
     // branch-local file about to move) BEFORE the first rename. A process
     // crash anywhere in the window [first rename, branch-dir delete]
@@ -3050,7 +2893,7 @@ final class GraftTable private (
       val covered = bFiles.flatMap(f => toMain(f.path)).toSet
       val removes = mainNow.keys.filterNot(covered).toSeq ++
         adds.map(_.path).filter(mainNow.contains) // changed entries re-add
-      commit(bp, "fastForward", adds, removes)
+      commit(snap, "fastForward", adds, removes)
     } catch {
       case e: Throwable =>
         // the publish did not land: return moved files to the branch so it
@@ -3089,8 +2932,8 @@ final class GraftTable private (
     require(!listBranches.contains(name),
       s"a live branch is named '$name' — VERSION AS OF '<name>' would be " +
         "ambiguous; publish/drop the branch or pick another tag name")
-    val v = atVersion.getOrElse(version)
-    val all = listVersions(fs, logDir)
+    val all = listLog(fs, logDir).versions
+    val v = atVersion.getOrElse(all.last)
     require(all.contains(v),
       s"version $v does not exist (have ${all.headOption.getOrElse(0L)}.." +
         s"${all.lastOption.getOrElse(0L)})")
@@ -3142,7 +2985,7 @@ final class GraftTable private (
     */
   private def tagReferencedLocal(): Set[String] =
     listTags.flatMap { case (_, v) =>
-      activeFiles(v).map(_.path).filterNot(_.contains("/"))
+      filesAt(v).map(_.path).filterNot(_.contains("/"))
     }.toSet
 
   /** Replay a publish manifest a crashed [[fastForward]] left behind.
@@ -3187,10 +3030,9 @@ final class GraftTable private (
     val rootQ = fs.makeQualified(new Path(location)).toString
     listBranches.flatMap { n =>
       val bLog = new Path(branchDir(n), LogDirName)
-      val versions = listVersions(fs, bLog)
-      val fromCp = listCheckpoints(fs, bLog)
-        .flatMap(v => readCheckpoint(fs, bLog, v))
-      val fromCommits = versions.flatMap(v => readCommit(fs, bLog, v)._2)
+      val log = listLog(fs, bLog)
+      val fromCp = log.checkpoints.flatMap(v => readCheckpoint(fs, bLog, v))
+      val fromCommits = log.versions.flatMap(v => readCommit(fs, bLog, v, schemaJson)._2)
       (fromCp ++ fromCommits).map(_.path)
         .filter(_.startsWith(rootQ + "/")).map(_.substring(rootQ.length + 1))
     }.toSet
@@ -3216,7 +3058,7 @@ final class GraftTable private (
     // TAG's pinned version likewise (the reproducibility contract: a
     // tagged training-data snapshot stays bit-readable until the tag is
     // dropped)
-    val live = activeFiles(version).map(_.path).toSet ++
+    val live = currentFiles.map(_.path).toSet ++
       branchReferencedLocal() ++ tagReferencedLocal()
     val horizon = System.currentTimeMillis() - retentionMs
     val orphans = fs.listStatus(new Path(location)).toSeq
@@ -3241,7 +3083,6 @@ final class GraftTable private (
     orphans
   }
 
-  /** Enforce identical column sets; reorder to table column order. */
   /** Null-fill generated columns `df` omits — writeData derives them from
     * their expressions (null slot = computed, the generated-column
     * contract), so writers never have to supply a derived value.
@@ -3255,8 +3096,8 @@ final class GraftTable private (
         d.withColumn(n, lit(null).cast(dt))
       }
 
-  private def alignSchema(df: DataFrame): DataFrame = {
-    val schema = tableSchema
+  /** Enforce identical column sets; reorder to `schema`'s column order. */
+  private def alignSchema(df: DataFrame, schema: StructType): DataFrame = {
     val filled = fillGenerated(df, schema)
     require(filled.columns.toSet == schema.fieldNames.toSet,
       s"schema mismatch: table has ${schema.fieldNames.mkString(",")}, " +
@@ -3284,8 +3125,9 @@ final class GraftTable private (
     * generation-referenced columns refuse). Any other conflict is loud,
     * never a silent cast.
     */
-  private def alignEvolving(df0: DataFrame, cur: StructType,
+  private def alignEvolving(df0: DataFrame, md: TableMetadata,
       mergeSchema: Boolean): (DataFrame, StructType) = {
+    val cur = md.structType
     val df = fillGenerated(df0, cur)
     if (!mergeSchema) {
       require(df.columns.toSet == cur.fieldNames.toSet,
@@ -3304,7 +3146,7 @@ final class GraftTable private (
           require(!partSourceCols.contains(f.name),
             s"cannot auto-widen partition (source) column '${f.name}': " +
               "transform hashes are type-dependent")
-          requireNoGeneratedOn(f.name, "auto-widen")
+          requireNoGeneratedOn(f.name, "auto-widen", cur)
           require(!GraftTable.generatedOf(cur).contains(f.name),
             s"cannot auto-widen generated column '${f.name}'")
           f.copy(dataType = g.dataType)
@@ -3348,23 +3190,17 @@ final class GraftTable private (
     * into the table root under fresh UUIDs; the directory layout is
     * scaffolding that dies with the tmp dir — partition identity lives in
     * the LOG, the object-store-friendly design.
+    *
+    * Everything about the layout comes from `md`: the operation's snapshot
+    * metadata, or for CREATE / REPLACE TABLE the new definition its commit
+    * will carry (the data is written under it while the log still carries
+    * the old one — the swap lands in that one commit).
     */
-  private def writeData(dfLogical: DataFrame,
-      consOverride: Option[Seq[(String, String)]] = None,
-      colmapOverride: Option[Map[String, String]] = None,
-      statsSchemaOverride: Option[StructType] = None,
-      keyColOverride: Option[Option[String]] = None,
-      partitionByOverride: Option[Seq[String]] = None,
-      bloomOverride: Option[Map[String, Long]] = None,
-      genOverride: Option[Map[String, String]] = None,
-      idOverride: Option[Map[String, IdentitySpec]] = None,
+  private def writeData(dfLogical: DataFrame, md: TableMetadata,
       idStrict: Boolean = false,
-      distribute: Boolean = true,
-      sortOverride: Option[Seq[String]] = None): Seq[AddFile] = {
-    // the overrides serve REPLACE TABLE: the data is written under the NEW
-    // definition (schema/colmap/constraints/key/partitioning) while the log
-    // still carries the old one — the swap lands in the same commit
-    val partitionBy = partitionByOverride.getOrElse(this.partitionBy)
+      distribute: Boolean = true): Seq[AddFile] = {
+    val partitionBy = md.partitionBy
+    val schema = md.structType
     // GENERATED ALWAYS AS columns, enforced at the ONE place every write
     // funnels through: a NULL slot is computed from the expression (the
     // [[generatedColumns]] contract — SQL null-fill, unassigned merge
@@ -3380,9 +3216,9 @@ final class GraftTable private (
     // question, answered by a pre-fill observe metric in the same write
     // pass. Rewrite paths (update/delete/compact survivors) legitimately
     // carry values and pass idStrict = false.
-    val idSpecs0 = idOverride.getOrElse(GraftTable.identityOf(tableSchema))
+    val idSpecs = GraftTable.identityOf(schema)
       .toSeq.sortBy(_._1).filter { case (n, _) => dfLogical.columns.contains(n) }
-    val strictIds = if (!idStrict) Nil else idSpecs0.filterNot(_._2.allowExplicit)
+    val strictIds = if (!idStrict) Nil else idSpecs.filterNot(_._2.allowExplicit)
     val obsId =
       if (strictIds.isEmpty) None
       else Some(new org.apache.spark.sql.Observation())
@@ -3391,7 +3227,7 @@ final class GraftTable private (
         sum(when(col(n).isNotNull, 1L).otherwise(0L)).as(n) }
       dfLogical.observe(o, ms.head, ms.tail: _*)
     }
-    val gens = genOverride.getOrElse(GraftTable.generatedOf(tableSchema))
+    val gens = GraftTable.generatedOf(schema)
       .toSeq.sortBy(_._1).filter { case (n, _) => dfLogical.columns.contains(n) }
     val dfGen0 = gens.foldLeft(dfStrict) { case (d, (n, e)) =>
       val dt = d.schema.fields.find(_.name == n).get.dataType
@@ -3401,10 +3237,8 @@ final class GraftTable private (
     // hwm + (mid+1)×step — unique within the write, gappy by design
     // (monotonically_increasing_id encodes the partition in the high
     // bits); rewrite paths carry non-null values through untouched
-    val idSpecs = idSpecs0
-    val hwm0 = currentIdHwm
     val dfGen = idSpecs.foldLeft(dfGen0) { case (d, (n, spec)) =>
-      val base = hwm0.getOrElse(n, spec.start - spec.step)
+      val base = md.idhwm.getOrElse(n, spec.start - spec.step)
       val dt = d.schema.fields.find(_.name == n).get.dataType
       d.withColumn(n, coalesce(col(n),
         (lit(base) + (monotonically_increasing_id() + lit(1L)) * lit(spec.step))
@@ -3425,7 +3259,7 @@ final class GraftTable private (
     // null-filling semantics (merge-insert unassigned columns, evolution
     // null-fill) depend on it — declare NOT NULL explicitly as a CHECK
     // constraint (`c IS NOT NULL`, the q303 surface) to enforce it.
-    val cons = consOverride.getOrElse(constraints.toSeq.sortBy(_._1)) ++
+    val cons = md.constraints.toSeq.sortBy(_._1) ++
       // post-coalesce the check only fires on supplied values that
       // CONTRADICT the expression (computed slots match trivially)
       gens.map { case (n, e) =>
@@ -3440,14 +3274,13 @@ final class GraftTable private (
     // files store PHYSICAL column names (stable across renames): a version
     // race against a concurrent rename loses the commit and retries, so a
     // file can never land under a stale mapping
-    val cm = colmapOverride.getOrElse(currentColmap)
     val df =
-      if (cm.isEmpty) guarded
-      else guarded.toDF(guarded.columns.toIndexedSeq.map(physName(cm, _)): _*)
+      if (md.colmap.isEmpty) guarded
+      else guarded.toDF(guarded.columns.toIndexedSeq.map(md.physName): _*)
     // BLOOM INDEX: configured columns ride parquet's own per-column
     // bloom-filter writer options (physical names — what the files store);
     // readers probe the resulting footer bitsets, see [[BloomIndex]]
-    val bloomOpts = bloomOverride.getOrElse(currentBloom).flatMap {
+    val bloomOpts = md.bloom.flatMap {
       case (p, ndv) => Seq(
         s"parquet.bloom.filter.enabled#$p" -> "true",
         s"parquet.bloom.filter.expected.ndv#$p" -> ndv.toString)
@@ -3465,8 +3298,7 @@ final class GraftTable private (
     // (distribute = false) carry a layout of their own — an optimize's
     // clustering, a survivor file's row order — that must reach the
     // writer untouched.
-    val sortCols = sortOverride.getOrElse(currentSort)
-      .filter(df.columns.contains)
+    val sortCols = md.sort.filter(df.columns.contains)
     def sorted(d: DataFrame): DataFrame =
       if (!distribute || sortCols.isEmpty) d
       else d.sortWithinPartitions(sortCols.map(col): _*)
@@ -3567,11 +3399,9 @@ final class GraftTable private (
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val statsSchema = statsSchemaOverride.getOrElse(tableSchema)
-        val keyC = keyColOverride.getOrElse(keyCol)
-        val prio = idSpecs.map { case (n, _) => physName(cm, n) }.toSet
-        Await.result(Future.traverse(found.toList) { st => Future {
-          val pv = parsePartitionValues(tmp, st.getPath)
+        val prio = idSpecs.map { case (n, _) => md.physName(n) }.toSet
+        val moves = found.map { st => Future {
+          val pv = parsePartitionValues(tmp, st.getPath, partitionBy)
           val bsuf = bucketKey.flatMap(pv.get).flatten
             .flatMap(v => scala.util.Try(v.toInt).toOption)
             .fold("")(id => f"_$id%05d")
@@ -3579,12 +3409,17 @@ final class GraftTable private (
           val dest = new Path(location, name)
           require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
           val (rows, stats, cs) =
-            footerStats(dest, keyC, statsSchema,
+            footerStats(dest, md.keyCol, schema,
               // identity hwm is recovered from these stats at commit time —
               // the columns must never fall off the stats column cap
               prio)
           AddFile(name, rows, stats, st.getLen, pv, cs)
-        } }, Duration.Inf)
+        } }
+        // settle EVERY move before the finally deletes `tmp` (a fail-fast
+        // traverse would return on the first failure while other renames
+        // still run against the directory being deleted), then rethrow the
+        // first failure
+        moves.map(m => Await.ready(m, Duration.Inf).value.get).map(_.get)
       }
     } finally fs.delete(tmp, true)
   }
@@ -3594,7 +3429,8 @@ final class GraftTable private (
     * `__HIVE_DEFAULT_PARTITION__` for null — and, a Hive quirk the shadow
     * cast inherits, for the empty string).
     */
-  private def parsePartitionValues(tmp: Path, file: Path): Map[String, Option[String]] = {
+  private def parsePartitionValues(tmp: Path, file: Path,
+      partitionBy: Seq[String]): Map[String, Option[String]] = {
     if (partitionBy.isEmpty) return Map.empty
     val rel = file.toString.stripPrefix(tmp.toString).stripPrefix("/")
     val dirs = rel.split('/').dropRight(1)
@@ -3611,7 +3447,7 @@ final class GraftTable private (
   }
 
   private def footerStats(p: Path, keyCol: Option[String],
-      tableSchema: StructType,
+      schema: StructType,
       priorityCols: Set[String] = Set.empty): (Long, Option[KeyStats], Map[String, KeyStats]) = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
     try {
@@ -3625,7 +3461,7 @@ final class GraftTable private (
       // wrong ordering that prunes a file holding matched keys. No stats =
       // no pruning, which is always correct.
       val stats = keyCol.filter { k =>
-        tableSchema.fields.find(_.name == k).map(_.dataType).exists {
+        schema.fields.find(_.name == k).map(_.dataType).exists {
           case ByteType | ShortType | IntegerType | LongType | StringType => true
           case _ => false
         }
@@ -3760,69 +3596,61 @@ final class GraftTable private (
     */
   private[tables] var checkpointInterval: Int = DefaultCheckpointInterval
 
-  private[tables] def commit(expected: Long, op: String,
+  /** Commit `adds` / `removes` as version `snap.version + 1`. The new
+    * metadata is `snap`'s carried forward, changed by `update` (a schema
+    * change, a new policy, REPLACE's whole new definition); `op`, `ts`,
+    * `txn` and `dataChange` describe this commit alone. Losing the version
+    * race throws [[GraftTable.ConcurrentCommitException]].
+    */
+  private[tables] def commit(snap: Snapshot, op: String,
       adds: Seq[AddFile], removes: Seq[String],
-      txn: Option[String] = None, newSchema: Option[StructType] = None,
-      newColmap: Option[Map[String, String]] = None,
-      newRetired: Option[Seq[String]] = None,
-      newConstraints: Option[Map[String, String]] = None,
-      dataChange: Boolean = true,
-      newKeyCol: Option[Option[String]] = None,
-      newPartitionBy: Option[Seq[String]] = None,
-      newBloom: Option[Map[String, Long]] = None,
-      newSort: Option[Seq[String]] = None,
-      newNdv: Option[Map[String, Long]] = None): Long = {
-    val next = expected + 1
-    val schema = newSchema.getOrElse(schemaAt(expected))
-    val cm = newColmap.getOrElse(colmapAt(expected))
-    val retired = newRetired.getOrElse(retiredAt(expected))
-    val cons = newConstraints.getOrElse(constraintsAt(expected))
-    val bloom = newBloom.getOrElse(bloomAt(expected))
-    val srt = newSort.getOrElse(sortAt(expected))
-    val ndvs = newNdv.getOrElse(ndvAt(expected))
+      txn: Option[String] = None, dataChange: Boolean = true,
+      update: TableMetadata => TableMetadata = identity): Long = {
+    val prior = snap.metadata
+    val next = snap.version + 1
     // WRITER feature gate: refuse to commit to a table whose log declares
     // writer features this engine does not implement — an unaware commit
     // would corrupt the invariant the feature maintains (skip a CHECK
     // constraint, reuse a retired physical name, …). Reads of such a
     // table stay allowed; only writes are refused. (Unknown READER
     // features already failed loud in readCommit before reaching here.)
-    val prior = featuresAt(expected)
-    val unknownW = prior._2.diff(SupportedWriterFeatures)
+    val unknownW = prior.writerFeatures.diff(SupportedWriterFeatures)
     if (unknownW.nonEmpty) throw new IllegalStateException(
       s"table at $location uses writer feature(s) " +
         s"${unknownW.toSeq.sorted.mkString(", ")} this engine does not " +
         "implement — refusing to write (an unaware commit would corrupt " +
         "what the feature maintains); upgrade the engine to write here")
-    // STALE-HANDLE guard: the partitioning this handle would record must
-    // match what the log says is in force at `expected` — after a
-    // setPartitioning / REPLACE from another handle, writing through THIS
-    // one would lay files out under the retired spec (and log a lie about
-    // the current one). Version conflicts catch racing writers; this
-    // catches the same-log sequential case.
-    if (newPartitionBy.isEmpty)
-      require(partitionByAt(expected) == partitionBy,
+    val md0 = update(prior).copy(op = op, ts = System.currentTimeMillis(),
+      txn = txn, dataChange = dataChange, branchPoint = None,
+      readerFeatures = prior.readerFeatures, writerFeatures = prior.writerFeatures)
+    // STALE-HANDLE guard: a commit that keeps the logged partitioning must
+    // come from a handle opened under it — after a setPartitioning /
+    // REPLACE from another handle, THIS one's pruning and layout follow the
+    // retired spec. Version conflicts catch racing writers; this catches
+    // the same-log sequential case.
+    if (md0.partitionBy == prior.partitionBy)
+      require(prior.partitionBy == partitionBy,
         s"stale table handle: partitioning changed from " +
           s"[${partitionBy.mkString(",")}] to " +
-          s"[${partitionByAt(expected).mkString(",")}] since this handle " +
+          s"[${prior.partitionBy.mkString(",")}] since this handle " +
           "was opened; re-open with GraftTable.at(...)")
     // same guard for the merge key: AddFile key stats are keyed to it —
     // committing stats computed for the OLD key under a NEW one would make
     // merge's file pruning read them as the wrong column (unsound)
-    if (newKeyCol.isEmpty)
-      require(cachedCommit(expected)._1.get("keyCol")
-          .flatMap(Option(_)).map(_.toString) == keyCol,
+    if (md0.keyCol == prior.keyCol)
+      require(prior.keyCol == keyCol,
         "stale table handle: the merge key changed since this handle was " +
           "opened; re-open with GraftTable.at(...)")
     // physical-uniqueness invariant: a NEW logical column whose name equals
     // a renamed column's retired physical name would collide in the files —
     // fail the commit, not the next read. Same for names RETIRED by DROP
     // COLUMN: old files still hold their values.
-    val phys = schema.fieldNames.toIndexedSeq.map(physName(cm, _))
+    val phys = md0.structType.fieldNames.toIndexedSeq.map(md0.physName)
     require(phys.distinct.size == phys.size,
       s"physical column collision: ${phys.diff(phys.distinct).distinct.mkString(",")} " +
         "— a column name retired by RENAME COLUMN cannot be reused while the " +
         "mapping is live")
-    val reused = phys.filter(retired.contains)
+    val reused = phys.filter(md0.retired.contains)
     require(reused.isEmpty,
       s"physical column collision with DROPPED column(s): ${reused.mkString(",")} " +
         "— old files still hold their values; bind a fresh physical name")
@@ -3831,32 +3659,19 @@ final class GraftTable private (
     // assignments move it) and are carried forward FOREVER — restore /
     // replace never reuse a value. Identity columns are exempt from the
     // stats cap, so the adds always carry the needed per-file max/min.
-    val idHwm: Map[String, Long] = {
-      val prev = idHwmAt(expected)
-      val specs = GraftTable.identityOf(schema)
-      if (specs.isEmpty) prev
-      else prev ++ specs.flatMap { case (n, spec) =>
-        val assigned = adds.flatMap(_.cs.get(physName(cm, n)))
-          .map(ks => if (spec.step > 0) ks.max.toLong else ks.min.toLong)
-        val all = prev.get(n).toSeq ++ assigned
-        if (all.isEmpty) None
-        else Some(n -> (if (spec.step > 0) all.max else all.min))
-      }
-    }
+    val md = withImpliedFeatures(md0.copy(
+      idhwm = advanceIdHwm(md0, adds)), adds)
     // one-shot test hook: lets specs land a concurrent commit between this
     // attempt's version read and its log write, making OCC races
     // deterministic (never set outside tests)
     val hook = onNextCommitAttempt
     if (hook != null) { onNextCommitAttempt = null; hook() }
-    // every commit carries the table identity (key + partitioning) so
-    // `at()` can read the LATEST definition — REPLACE TABLE may change both
-    writeCommit(fs, logDir, next,
-      metaMap(op, newKeyCol.getOrElse(keyCol), schema.json, txn,
-        newPartitionBy.getOrElse(partitionBy), cm, retired, cons, dataChange,
-        bloom, idHwm, srt, priorFeatures = prior, adds = adds, ndv = ndvs),
-      adds, removes)
-    if (checkpointInterval > 0 && next % checkpointInterval == 0)
-      writeCheckpoint(fs, logDir, next, activeFiles(next), committedTxns)
+    writeCommit(fs, logDir, next, md, adds, removes)
+    if (checkpointInterval > 0 && next % checkpointInterval == 0) {
+      val active = scala.collection.mutable.LinkedHashMap.from(snap.files.map(f => f.path -> f))
+      applyActions(active, adds, removes)
+      writeCheckpoint(fs, logDir, next, active.values.toSeq, committedTxns)
+    }
     next
   }
 
@@ -3874,12 +3689,12 @@ final class GraftTable private (
     * guard fails it loud) — re-open with `GraftTable.at(...)`.
     */
   def setPartitioning(specs: Seq[String]): Long = {
-    val v = version
+    val snap = snapshotAt()
     val parsed = specs.map(PartitionTransforms.parse)
-    PartitionTransforms.validate(parsed, schemaAt(v))
-    require(specs != partitionByAt(v),
+    PartitionTransforms.validate(parsed, snap.metadata.structType)
+    require(specs != snap.metadata.partitionBy,
       s"partitioning is already [${specs.mkString(",")}]")
-    commit(v, "setPartitioning", Nil, Nil, newPartitionBy = Some(specs))
+    commit(snap, "setPartitioning", Nil, Nil, update = _.copy(partitionBy = specs))
   }
 
   /** TYPE WIDENING (the published Delta type-widening contract): change a
@@ -3906,8 +3721,8 @@ final class GraftTable private (
     * contract). The merge key CAN widen — its stats are type-stable.
     */
   def widenColumn(name: String, newType: DataType): Long = {
-    val v = version
-    val cur = schemaAt(v)
+    val snap = snapshotAt()
+    val cur = snap.metadata.structType
     val f = cur.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"no column '$name' in ${cur.fieldNames.mkString(",")}"))
@@ -3919,13 +3734,13 @@ final class GraftTable private (
     require(!partSourceCols.contains(name),
       s"cannot widen partition (source) column '$name': transform hashes " +
         "are type-dependent, so old files' cell membership would diverge")
-    requireNoGeneratedOn(name, "widen")
+    requireNoGeneratedOn(name, "widen", cur)
     require(!GraftTable.generatedOf(cur).contains(name),
       s"cannot widen generated column '$name': its type follows its " +
         "generation expression")
     val evolved = StructType(cur.fields.toIndexedSeq.map(x =>
       if (x.name == name) x.copy(dataType = newType) else x))
-    commit(v, "widenColumn", Nil, Nil, None, Some(evolved))
+    commit(snap, "widenColumn", Nil, Nil, update = _.copy(schema = evolved.json))
   }
 
   /** Rename a column in ONE metadata-only commit (no file touched, O(1) at
@@ -3939,27 +3754,28 @@ final class GraftTable private (
   def renameColumn(oldName: String, newName: String): Long = {
     require(oldName != newName, "rename to the same name is a no-op; refusing")
     require(newName.nonEmpty, "new column name must be non-empty")
-    val v = version
-    val cur = schemaAt(v)
-    val cm = colmapAt(v)
+    val snap = snapshotAt()
+    val md = snap.metadata
+    val cur = md.structType
     require(cur.fieldNames.contains(oldName),
       s"no column '$oldName' in ${cur.fieldNames.mkString(",")}")
     require(!cur.fieldNames.exists(_.equalsIgnoreCase(newName)),
       s"column '$newName' already exists")
-    require(!retiredAt(v).contains(newName),
+    require(!md.retired.contains(newName),
       s"'$newName' is the retired physical name of a DROPPED column; " +
         "old files still hold its values — pick a different name")
     require(!keyCol.contains(oldName), "cannot rename the merge key column")
     require(!partSourceCols.contains(oldName),
       "cannot rename a partition (source) column")
-    requireNoConstraintOn(oldName, "rename")
-    requireNoGeneratedOn(oldName, "rename")
+    requireNoConstraintOn(oldName, "rename", md)
+    requireNoGeneratedOn(oldName, "rename", cur)
     val evolved = StructType(cur.fields.toIndexedSeq.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
-    val p = physName(cm, oldName)
-    val newCm = (cm - oldName) ++
+    val p = md.physName(oldName)
+    val newCm = (md.colmap - oldName) ++
       (if (newName == p) Map.empty[String, String] else Map(newName -> p))
-    commit(v, "renameColumn", Nil, Nil, None, Some(evolved), Some(newCm))
+    commit(snap, "renameColumn", Nil, Nil,
+      update = _.copy(schema = evolved.json, colmap = newCm))
   }
 }
 
@@ -4200,18 +4016,6 @@ object GraftTable {
     */
   private[tables] val BloomCacheMaxEntries = 512
 
-  /** Commit-meta `partitionBy` decode: transform specs ride a JSON list,
-    * identity-only tables the legacy comma-joined string.
-    */
-  private[tables] def decodePartitionBy(raw: Option[Any]): Seq[String] =
-    raw match {
-      case Some(l: java.util.List[_]) => l.asScala.toSeq.map(_.toString)
-      case Some(s) =>
-        Option(s).map(_.toString).filter(_.nonEmpty)
-          .map(_.split(",").toSeq).getOrElse(Nil)
-      case None => Nil
-    }
-
   /** Hive's sentinel directory value for a null partition key. */
   private val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
@@ -4343,42 +4147,30 @@ object GraftTable {
       s"keyCol $k not in ${schemaWithGen.fieldNames.mkString(",")}"))
     PartitionTransforms.validate(partitionBy.map(PartitionTransforms.parse),
       schemaWithGen)
-    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(location)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(root, LogDirName)
     require(!fs.exists(logDir), s"table already exists at $location")
-    fs.mkdirs(logDir)
-    val schemaJson = schemaWithGen.json
-    val t = new GraftTable(location, spark, keyCol, schemaJson, partitionBy)
-    val gens = generatedOf(schemaWithGen)
-    gens.foreach { case (n, e) => t.validateGeneratedSql(n, e, schemaWithGen) }
+    val t = new GraftTable(location, spark, keyCol, schemaWithGen.json, partitionBy)
+    generatedOf(schemaWithGen).foreach { case (n, e) =>
+      t.validateGeneratedSql(n, e, schemaWithGen) }
+    constraints.foreach { case (n, sql) => t.validateConstraintSql(n, sql, schemaWithGen) }
     // declared CHECK constraints land IN the create commit and gate its
     // data — a violating CTAS commits NOTHING (single-commit atomicity),
     // unlike create-then-addConstraint which could strand constraint-less
     // data on a crash between the two commits
-    val cons = constraints.toSeq.sortBy(_._1)
-    cons.foreach { case (n, sql) => t.validateConstraintSql(n, sql, schemaWithGen) }
+    val md = TableMetadata("create", 0L, keyCol, schemaWithGen.json,
+      partitionBy = partitionBy, constraints = constraints)
     // aligned by construction (withId carries exactly the declared
     // columns); alignSchema's GENERATED-ALWAYS presence check must not
     // fire on create's own null identity slots
-    val ids = identityOf(schemaWithGen)
     val adds = t.writeData(
       withId.select(schemaWithGen.fieldNames.toIndexedSeq.map(col): _*),
-      consOverride = Some(cons), genOverride = Some(gens),
-      idOverride = Some(ids), idStrict = true)
+      md, idStrict = true)
     // the create commit seeds the identity high-water marks from its own
     // assigned values (later commits go through commit(), which advances)
-    val idHwmCreate = ids.flatMap { case (n, spec) =>
-      val assigned = adds.flatMap(_.cs.get(n))
-        .map(ks => if (spec.step > 0) ks.max.toLong else ks.min.toLong)
-      if (assigned.isEmpty) None
-      else Some(n -> (if (spec.step > 0) assigned.max else assigned.min))
-    }
-    writeCommit(fs, logDir, 1L,
-      metaMap("create", keyCol, schemaJson, None, partitionBy,
-        constraints = constraints, idHwm = idHwmCreate, adds = adds),
-      adds, Nil)
+    createLog(fs, logDir, withImpliedFeatures(md.copy(ts = System.currentTimeMillis(),
+      idhwm = advanceIdHwm(md, adds)), adds), adds)
     t
   }
 
@@ -4386,16 +4178,17 @@ object GraftTable {
     * create commit).
     */
   def at(spark: SparkSession, location: String): GraftTable = {
-    val conf = spark.sessionState.newHadoopConf()
     val logDir = new Path(new Path(location), LogDirName)
-    val fs = logDir.getFileSystem(conf)
-    require(fs.exists(logDir), s"no table at $location")
+    val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
+    // a log holding no commits is no table (a failed create of an older
+    // engine could strand an empty one)
+    val versions = if (fs.exists(logDir)) listLog(fs, logDir).versions else Nil
+    require(versions.nonEmpty, s"no table at $location")
     // identity comes from the LATEST commit: REPLACE TABLE may have
     // redefined key and partitioning since creation
-    val (meta, _, _) = readCommit(fs, logDir, listVersions(fs, logDir).last)
-    val key = Option(meta.get("keyCol").orNull).map(_.toString).filter(_.nonEmpty)
-    val parts = decodePartitionBy(meta.get("partitionBy"))
-    new GraftTable(location, spark, key, meta("schema").toString, parts)
+    val md = readCommit(fs, logDir, versions.last, defaultSchema = "")._1
+    require(md.schema.nonEmpty, s"commit ${versions.last} under $logDir has no schema")
+    new GraftTable(location, spark, md.keyCol, md.schema, md.partitionBy)
   }
 
   /** PROTOCOL feature gate (the Delta minReader/minWriter / Iceberg
@@ -4433,116 +4226,42 @@ object GraftTable {
       "identity-columns", "unique-key", "partition-transforms",
       "bloom-index", "sort-order", "branches")
 
-  /** The feature sets a commit with this state implies — derived, never
+  /** `md` with the features a commit of its state (adding `adds`)
+    * implies joined to the ones it carries (sticky) — derived, never
     * hand-maintained, so a new surface that forgets to register here is
     * caught by the derivation tests rather than silently ungated.
     */
-  private def impliedFeatures(schemaJson: String,
-      partitionBy: Seq[String], colmap: Map[String, String],
-      retired: Seq[String], constraints: Map[String, String],
-      bloom: Map[String, Long], idHwm: Map[String, Long], sort: Seq[String],
-      adds: Seq[AddFile]): (Set[String], Set[String]) = {
+  private def withImpliedFeatures(md: TableMetadata, adds: Seq[AddFile]): TableMetadata = {
     val r = Set.newBuilder[String]
     val w = Set.newBuilder[String]
     if (adds.exists(_.dv.isDefined)) r += "deletion-vectors"
-    if (colmap.nonEmpty) r += "column-mapping"
-    if (retired.nonEmpty) w += "drop-columns"
-    if (constraints.nonEmpty) w += "check-constraints"
-    if (bloom.nonEmpty) w += "bloom-index"
-    if (idHwm.nonEmpty) w += "identity-columns"
-    if (sort.nonEmpty) w += "sort-order"
-    if (partitionBy.exists(_.contains("("))) w += "partition-transforms"
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    if (md.colmap.nonEmpty) r += "column-mapping"
+    if (md.retired.nonEmpty) w += "drop-columns"
+    if (md.constraints.nonEmpty) w += "check-constraints"
+    if (md.bloom.nonEmpty) w += "bloom-index"
+    if (md.idhwm.nonEmpty) w += "identity-columns"
+    if (md.sort.nonEmpty) w += "sort-order"
+    if (md.partitionBy.exists(_.contains("("))) w += "partition-transforms"
+    val schema = md.structType
     if (generatedOf(schema).nonEmpty) w += "generated-columns"
     if (identityOf(schema).nonEmpty) w += "identity-columns"
     if (schema.fields.exists(f => f.metadata.contains(KeyUniqueKey) &&
         f.metadata.getBoolean(KeyUniqueKey))) w += "unique-key"
-    (r.result(), w.result())
+    md.copy(readerFeatures = md.readerFeatures ++ r.result(),
+      writerFeatures = md.writerFeatures ++ w.result())
   }
 
-  private def metaMap(op: String, keyCol: Option[String], schemaJson: String,
-      txn: Option[String] = None, partitionBy: Seq[String] = Nil,
-      colmap: Map[String, String] = Map.empty,
-      retired: Seq[String] = Nil,
-      constraints: Map[String, String] = Map.empty,
-      dataChange: Boolean = true,
-      bloom: Map[String, Long] = Map.empty,
-      idHwm: Map[String, Long] = Map.empty,
-      sort: Seq[String] = Nil,
-      priorFeatures: (Set[String], Set[String]) = (Set.empty, Set.empty),
-      adds: Seq[AddFile] = Nil,
-      ndv: Map[String, Long] = Map.empty) = {
-    val m = new java.util.LinkedHashMap[String, Any]()
-    m.put("op", op)
-    m.put("ts", System.currentTimeMillis())
-    m.put("keyCol", keyCol.orNull)
-    m.put("schema", schemaJson)
-    txn.foreach(m.put("txn", _))
-    if (partitionBy.nonEmpty) {
-      // transform specs contain commas ("bucket(8,k)") — they ride a JSON
-      // list; identity-only tables keep the legacy comma-string encoding
-      // byte-for-byte so existing logs and their readers are untouched
-      if (partitionBy.exists(_.contains("("))) {
-        val pj = new java.util.ArrayList[String]()
-        partitionBy.foreach(pj.add)
-        m.put("partitionBy", pj)
-      } else m.put("partitionBy", partitionBy.mkString(","))
+  /** Identity high-water marks after a commit of `adds` under `md`: each
+    * identity column's mark advances to the furthest value the adds hold
+    * (identity columns are exempt from the stats column cap, so every add
+    * carries its max / min) and is otherwise carried forward.
+    */
+  private def advanceIdHwm(md: TableMetadata, adds: Seq[AddFile]): Map[String, Long] =
+    md.idhwm ++ identityOf(md.structType).flatMap { case (n, spec) =>
+      val all = md.idhwm.get(n).toSeq ++ adds.flatMap(_.cs.get(md.physName(n)))
+        .map(ks => if (spec.step > 0) ks.max.toLong else ks.min.toLong)
+      if (all.isEmpty) None else Some(n -> (if (spec.step > 0) all.max else all.min))
     }
-    if (colmap.nonEmpty) {
-      val cmj = new java.util.LinkedHashMap[String, Any]()
-      colmap.foreach { case (l, p) => cmj.put(l, p) }
-      m.put("colmap", cmj)
-    }
-    if (retired.nonEmpty) {
-      val rj = new java.util.ArrayList[String]()
-      retired.foreach(rj.add)
-      m.put("retired", rj)
-    }
-    if (constraints.nonEmpty) {
-      val cj = new java.util.LinkedHashMap[String, Any]()
-      constraints.foreach { case (n, s) => cj.put(n, s) }
-      m.put("constraints", cj)
-    }
-    if (bloom.nonEmpty) {
-      val bj = new java.util.LinkedHashMap[String, Any]()
-      bloom.toSeq.sortBy(_._1).foreach { case (c, ndv) => bj.put(c, ndv) }
-      m.put("bloom", bj)
-    }
-    if (idHwm.nonEmpty) {
-      val ij = new java.util.LinkedHashMap[String, Any]()
-      idHwm.toSeq.sortBy(_._1).foreach { case (c, v) => ij.put(c, v) }
-      m.put("idhwm", ij)
-    }
-    if (ndv.nonEmpty) {
-      val nj = new java.util.LinkedHashMap[String, Any]()
-      ndv.toSeq.sortBy(_._1).foreach { case (c, v) => nj.put(c, v) }
-      m.put("ndv", nj)
-    }
-    if (sort.nonEmpty) {
-      val sj = new java.util.ArrayList[String]()
-      sort.foreach(sj.add)
-      m.put("sort", sj)
-    }
-    // layout-only commits (compact/optimize): rows unchanged, so change
-    // feeds skip them without reading the rewritten files
-    if (!dataChange) m.put("dataChange", false)
-    // sticky feature gate: prior ∪ implied-by-this-commit, sorted for
-    // byte-stable rendering
-    val (ir, iw) = impliedFeatures(schemaJson, partitionBy, colmap, retired,
-      constraints, bloom, idHwm, sort, adds)
-    val (fr, fw) = (priorFeatures._1 ++ ir, priorFeatures._2 ++ iw)
-    if (fr.nonEmpty) {
-      val l = new java.util.ArrayList[String]()
-      fr.toSeq.sorted.foreach(l.add)
-      m.put("readerFeatures", l)
-    }
-    if (fw.nonEmpty) {
-      val l = new java.util.ArrayList[String]()
-      fw.toSeq.sorted.foreach(l.add)
-      m.put("writerFeatures", l)
-    }
-    m.asScala.toMap
-  }
 
   private def logPath(logDir: Path, v: Long) = new Path(logDir, f"$v%020d.json")
   private def checkpointPath(logDir: Path, v: Long) =
@@ -4551,13 +4270,44 @@ object GraftTable {
   private val CommitName = """(\d{20})\.json""".r
   private val CheckpointName = """(\d{20})\.checkpoint\.json""".r
 
-  private def listVersions(fs: FileSystem, logDir: Path): Seq[Long] =
-    fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case CommitName(v) => v.toLong }.sorted
+  /** The commit and checkpoint versions of a log, ascending. */
+  private final case class LogListing(versions: Seq[Long], checkpoints: Seq[Long]) {
+    def latest(logDir: Path): Long = versions.lastOption.getOrElse(
+      throw new IllegalStateException(s"no commits under $logDir"))
+  }
 
-  private def listCheckpoints(fs: FileSystem, logDir: Path): Seq[Long] =
-    fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-      .collect { case CheckpointName(v) => v.toLong }.sorted
+  /** ONE listing of the log answers both commit and checkpoint versions. */
+  private def listLog(fs: FileSystem, logDir: Path): LogListing = {
+    val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
+    LogListing(names.collect { case CommitName(v) => v.toLong }.sorted,
+      names.collect { case CheckpointName(v) => v.toLong }.sorted)
+  }
+
+  /** Replay one commit's actions onto an active-file map. */
+  private def applyActions(active: scala.collection.mutable.LinkedHashMap[String, AddFile],
+      adds: Seq[AddFile], removes: Seq[String]): Unit = {
+    removes.foreach(active.remove)
+    adds.foreach(a => active(a.path) = a)
+  }
+
+  /** A new table's log becomes visible together with its first commit:
+    * commit 1 is written into a staging directory that is then renamed to
+    * `logDir`, so a create that fails before (a CHECK-violating CTAS, a
+    * crash) leaves no log behind to block a retry.
+    */
+  private def createLog(fs: FileSystem, logDir: Path, md: TableMetadata,
+      adds: Seq[AddFile]): Unit = {
+    val stage = new Path(logDir.getParent, s"_tmp-log-${UUID.randomUUID()}")
+    try {
+      writeCommit(fs, stage, 1L, md, adds, Nil)
+      require(renameLock.synchronized(!fs.exists(logDir) && fs.rename(stage, logDir)),
+        s"table already exists at ${logDir.getParent}")
+    } finally fs.delete(stage, true)
+  }
+
+  /** A commit's `{"meta":…}` line. */
+  private[tables] def metaLine(md: TableMetadata): String =
+    mapper.writeValueAsString(Map("meta" -> md.encode.asJava).asJava)
 
   /** One NDJSON commit file, made visible ATOMICALLY: the content is fully
     * written to a hidden temp file in the log dir, then `rename`d into
@@ -4572,13 +4322,12 @@ object GraftTable {
     * racing-writers stress spec.)
     */
   private def writeCommit(fs: FileSystem, logDir: Path, v: Long,
-      meta: Map[String, Any], adds: Seq[AddFile], removes: Seq[String]): Unit = {
+      md: TableMetadata, adds: Seq[AddFile], removes: Seq[String]): Unit = {
     val tmp = new Path(logDir, s".tmp-commit-${UUID.randomUUID()}")
     val out = fs.create(tmp, false)
     try {
       val sb = new StringBuilder
-      sb.append(mapper.writeValueAsString(
-        Map("meta" -> meta.asJava).asJava)).append('\n')
+      sb.append(metaLine(md)).append('\n')
       adds.foreach { a =>
         sb.append(mapper.writeValueAsString(Map("add" -> addNode(a)).asJava)).append('\n')
       }
@@ -4614,17 +4363,16 @@ object GraftTable {
     }
   private val renameLock = new Object
 
-  private def readCommit(fs: FileSystem, logDir: Path, v: Long)
-      : (Map[String, Any], Seq[AddFile], Seq[String]) = {
+  private def readCommit(fs: FileSystem, logDir: Path, v: Long, defaultSchema: String)
+      : (TableMetadata, Seq[AddFile], Seq[String]) = {
     val text = readFully(fs, logPath(logDir, v))
-    var meta = Map.empty[String, Any]
+    var meta = java.util.Collections.emptyMap[String, Object]()
     val adds = Seq.newBuilder[AddFile]
     val removes = Seq.newBuilder[String]
     text.linesIterator.filter(_.nonEmpty).foreach { line =>
       val node = mapper.readValue(line, classOf[java.util.Map[String, Object]])
       if (node.containsKey("meta"))
         meta = node.get("meta").asInstanceOf[java.util.Map[String, Object]]
-          .asScala.toMap
       else if (node.containsKey("add"))
         adds += parseAdd(node.get("add").asInstanceOf[java.util.Map[String, Object]])
       else if (node.containsKey("remove"))
@@ -4641,17 +4389,14 @@ object GraftTable {
     // READER feature gate: a feature-unaware scan would be silently wrong
     // (a DV-unaware reader returns deleted rows; a colmap-unaware reader
     // returns physical names) — refuse loud, naming the features
-    meta.get("readerFeatures") match {
-      case Some(l: java.util.List[_]) =>
-        val unknown = l.asScala.map(_.toString).toSet.diff(SupportedReaderFeatures)
-        if (unknown.nonEmpty) throw new IllegalStateException(
-          s"commit $v at $logDir requires reader feature(s) " +
-            s"${unknown.toSeq.sorted.mkString(", ")} this engine does not " +
-            "implement — refusing to read (an unaware read would silently " +
-            "return wrong rows); upgrade the engine to read this table")
-      case _ => ()
-    }
-    (meta, adds.result(), removes.result())
+    val md = TableMetadata.decode(meta, defaultSchema)
+    val unknown = md.readerFeatures.diff(SupportedReaderFeatures)
+    if (unknown.nonEmpty) throw new IllegalStateException(
+      s"commit $v at $logDir requires reader feature(s) " +
+        s"${unknown.toSeq.sorted.mkString(", ")} this engine does not " +
+        "implement — refusing to read (an unaware read would silently " +
+        "return wrong rows); upgrade the engine to read this table")
+    (md, adds.result(), removes.result())
   }
 
   /** Grace window before an unreferenced data file becomes reclaimable —

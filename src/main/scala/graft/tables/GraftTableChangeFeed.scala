@@ -197,13 +197,13 @@ private[tables] final class GraftTableChangeFeedStream(
     var admitted = 0L
     while (v < latest && admitted < cap) {
       v += 1
-      if (!table.commitActions(v)._1.get("dataChange").contains(false))
+      if (table.commitActions(v)._1.dataChange)
         admitted += 1
     }
     // trailing layout-only commits ride along (they would otherwise leave
     // the offset parked before a run of empties)
     while (v < latest &&
-        table.commitActions(v + 1)._1.get("dataChange").contains(false))
+        !table.commitActions(v + 1)._1.dataChange)
       v += 1
     if (v <= s) null else LongOffset(v)
   }

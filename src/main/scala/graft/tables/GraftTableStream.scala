@@ -109,19 +109,19 @@ final class GraftTableStreamSource extends TableProvider with DataSourceRegister
   override def supportsExternalMetadata(): Boolean = false
 }
 
-private[tables] final class GraftTableStreamTable(location: String, tableSchema: StructType)
+private[tables] final class GraftTableStreamTable(location: String, streamSchema: StructType)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String = s"graft-table($location)"
-  override def schema(): StructType = tableSchema
+  override def schema(): StructType = streamSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan = new Scan {
-        override def readSchema(): StructType = tableSchema
+        override def readSchema(): StructType = streamSchema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new GraftTableMicroBatchStream(location, tableSchema, options)
+          new GraftTableMicroBatchStream(location, streamSchema, options)
         override def description(): String = s"graft-table stream ($location)"
       }
     }
@@ -260,10 +260,10 @@ private[tables] final class GraftTableMicroBatchStream(
   private def emittable(v: Long): Seq[GraftTable.AddFile] = {
     val (meta, adds, removes) = table.commitActions(v)
     if (removes.nonEmpty) {
-      if (meta.get("dataChange").contains(false)) return Seq.empty
+      if (!meta.dataChange) return Seq.empty
       if (!skipChangeCommits) throw new IllegalStateException(
         s"streaming read hit a non-append commit at version $v " +
-          s"(op=${meta.getOrElse("op", "?")}, ${removes.size} file(s) removed); " +
+          s"(op=${meta.op}, ${removes.size} file(s) removed); " +
           "the table-as-stream contract is append-only — restart from a " +
           "later startingVersion, or set skipChangeCommits=true to skip " +
           "such commits wholesale")

@@ -38,4 +38,14 @@ class TablesSpec extends SparkTestBase {
     val bad = got.where(col("ts") =!= col("us") * 1000L)
     assert(bad.isEmpty, s"nanos mismatch: ${bad.collect().mkString(",")}")
   }
+
+  test("a parquet rewritten in place is read with its new schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables-rewrite").toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/region.parquet")
+    assert(Tables(spark, dir, "region").columns.toSeq == Seq("k", "v"))
+    Seq((2L, "b", 7L)).toDF("k", "v", "extra")
+      .write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val got = Tables(spark, dir, "region")
+    assert(got.select("extra").as[Long].collect().toSeq == Seq(7L))
+  }
 }

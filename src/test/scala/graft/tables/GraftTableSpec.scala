@@ -2,6 +2,8 @@ package graft.tables
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
@@ -361,7 +363,7 @@ class GraftTableSpec extends SparkTestBase {
     t1.append(Seq((2L, "b")).toDF("k", "v"))
     val before = rows(t1)
     intercept[GraftTable.ConcurrentCommitException] {
-      t2.commit(1L, "append", Seq.empty, Seq.empty)
+      t2.commit(t2.snapshotAt(Some(1L)), "append", Seq.empty, Seq.empty)
     }
     assert(t1.version == 2L)
     assert(rows(t1) == before)
@@ -2315,5 +2317,150 @@ class GraftTableSpec extends SparkTestBase {
     assert(got.size == 96)                                // 95 survivors + 1 new
     assert(got((50L, "M")) && got((999L, "NEW")))
     assert(!(1L to 5L).exists(k => got.exists(_._1 == k)), "deleted keys resurfaced")
+  }
+
+  // ---- the log's typed metadata and per-operation snapshots
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The `{"meta":…}` line of every commit under `logDir`, by file name. */
+  private def metaLines(logDir: java.io.File): Seq[(String, String)] =
+    logDir.listFiles().toSeq.map(_.getName)
+      .filter(_.matches("""\d{20}\.json""")).sorted.map { n =>
+        n -> new String(java.nio.file.Files.readAllBytes(
+          new java.io.File(logDir, n).toPath), "UTF-8").linesIterator.next()
+      }
+
+  private def decodeMeta(line: String): TableMetadata = TableMetadata.decode(
+    mapper.readValue(line, classOf[java.util.Map[String, Object]])
+      .get("meta").asInstanceOf[java.util.Map[String, Object]], "")
+
+  test("every meta line decodes and re-encodes to identical bytes") {
+    val loc = tmp()
+    val t = GraftTable.create(spark, loc,
+      (1L to 6L).map(k => (k, s"v$k", k * 10, s"w$k")).toDF("k", "v", "n", "w"),
+      keyCol = Some("k"), partitionBy = Seq("bucket(2,k)"),
+      identityColumns = Map("id" -> GraftTable.IdentitySpec(1L, 1L)))
+    t.renameColumn("v", "label")                        // colmap
+    t.dropColumn("w")                                    // retired
+    t.addConstraint("k_pos", "k > 0")                    // constraints
+    t.setBloomFilter(Map("k" -> 100L))                   // bloom
+    t.setSortOrder(Seq("n"))                             // sort
+    t.analyze()                                          // ndv
+    t.appendIfAbsent("txn-1", Seq((7L, "v7", 70L)).toDF("k", "label", "n")) // txn, idhwm
+    t.deleteWhere(col("k") === 1L)                       // deletion vector
+    t.compact()                                          // dataChange = false
+    t.createBranch("b1")                                 // branchPoint
+    val lines = metaLines(new java.io.File(loc, "_graft_log")) ++
+      metaLines(new java.io.File(loc, "_graft_branches/b1/_graft_log"))
+    lines.foreach { case (n, line) =>
+      assert(GraftTable.metaLine(decodeMeta(line)) == line, s"$n does not round-trip")
+    }
+    val keys = lines.flatMap { case (_, line) =>
+      mapper.readTree(line).get("meta").fieldNames().asScala }.toSet
+    assert(keys == Set("op", "ts", "keyCol", "schema", "txn", "partitionBy",
+      "colmap", "retired", "constraints", "bloom", "idhwm", "ndv", "sort",
+      "dataChange", "readerFeatures", "writerFeatures", "branchPoint"), keys)
+  }
+
+  test("a legacy log (comma-string partitionBy, no feature keys) opens, reads and appends") {
+    val loc = tmp()
+    val staged = tmp()
+    Seq((1L, "A", "x"), (2L, "A", "x")).toDF("k", "p", "q").coalesce(1)
+      .write.parquet(staged)
+    val part = new java.io.File(staged).listFiles().find(_.getName.endsWith(".parquet")).get
+    val data = new java.io.File(loc, "part-legacy.parquet")
+    data.getParentFile.mkdirs()
+    java.nio.file.Files.copy(part.toPath, data.toPath)
+    val schema = Seq((0L, "", "")).toDF("k", "p", "q").schema.json
+    val logDir = new java.io.File(loc, "_graft_log")
+    logDir.mkdirs()
+    val meta = new java.util.LinkedHashMap[String, Object]()
+    meta.put("op", "create"); meta.put("ts", java.lang.Long.valueOf(1700000000000L))
+    meta.put("keyCol", "k"); meta.put("schema", schema); meta.put("partitionBy", "p,q")
+    val add = Map[String, Object]("path" -> data.getName, "rows" -> Long.box(2L),
+      "bytes" -> Long.box(data.length()), "pv" -> Map("p" -> "A", "q" -> "x").asJava)
+    java.nio.file.Files.write(new java.io.File(logDir, f"${1L}%020d.json").toPath,
+      (mapper.writeValueAsString(Map("meta" -> meta).asJava) + "\n" +
+        mapper.writeValueAsString(Map("add" -> add.asJava).asJava) + "\n").getBytes("UTF-8"))
+    val t = GraftTable.at(spark, loc)
+    assert(t.keyCol.contains("k") && t.partitionBy == Seq("p", "q"))
+    assert(t.features == ((Nil, Nil)))
+    def all = t.snapshot().as[(Long, String, String)].collect().toSet
+    assert(all == Set((1L, "A", "x"), (2L, "A", "x")))
+    assert(t.append(Seq((3L, "B", "y")).toDF("k", "p", "q")) == 2L)
+    assert(all == Set((1L, "A", "x"), (2L, "A", "x"), (3L, "B", "y")))
+    assert(t.snapshotWhere(col("p") === "B").count() == 1L)
+    val appended = metaLines(logDir).last._2
+    assert(appended.contains(""""partitionBy":"p,q"""") &&
+      !appended.contains("Features"), appended)
+  }
+
+  test("a refused create leaves no log behind: at() says no table, a re-create works") {
+    val loc = tmp()
+    val cons = Map("price_pos" -> "price >= 0")
+    intercept[IllegalArgumentException](GraftTable.create(spark, loc,
+      Seq((1L, -5.0)).toDF("k", "price"), constraints = cons))
+    assert(!new java.io.File(loc, "_graft_log").exists())
+    val e = intercept[IllegalArgumentException](GraftTable.at(spark, loc))
+    assert(e.getMessage.contains("no table"), e.getMessage)
+    GraftTable.create(spark, loc, Seq((1L, 5.0)).toDF("k", "price"), constraints = cons)
+    assert(GraftTable.at(spark, loc).snapshot().count() == 1L)
+    // an empty log directory (stranded by an older engine) is no table either
+    val empty = tmp()
+    new java.io.File(empty, "_graft_log").mkdirs()
+    val e2 = intercept[IllegalArgumentException](GraftTable.at(spark, empty))
+    assert(e2.getMessage.contains("no table"), e2.getMessage)
+  }
+
+  test("a failed data-file rename settles every other rename before tmp is deleted") {
+    val loc = tmp()
+    GraftTable.create(spark, loc, Seq((1L, "a")).toDF("k", "p"), partitionBy = Seq("p"))
+    val root = new org.apache.hadoop.fs.Path(loc).toUri.getPath
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    SpecFileSystem.installed(this) {
+      val t = GraftTable.at(spark, loc)
+      // data-file moves out of the write's `_tmp-` dir into the table root:
+      // the first fails at once, the others are still running when it does
+      SpecFileSystem.aroundRename = (src, dst, rename) =>
+        if (dst.getParent.toUri.getPath != root || !src.toString.contains("/_tmp-")) rename()
+        else if (seen.getAndIncrement() == 0) throw new java.io.IOException("injected")
+        else { Thread.sleep(300); rename() }
+      intercept[java.io.IOException](
+        t.append(Seq((2L, "b"), (3L, "c"), (4L, "d"), (5L, "e")).toDF("k", "p")))
+      Thread.sleep(1000) // a straggler would end by now
+      val ev = SpecFileSystem.events.asScala.toSeq
+      val tmpDelete = ev.indexWhere(_.matches("delete .*/_tmp-[0-9a-f-]{36}"))
+      assert(seen.get >= 2 && tmpDelete >= 0, ev)
+      assert(!ev.drop(tmpDelete).exists(_.startsWith("rename-end ")),
+        s"a rename ended after the tmp delete: $ev")
+      assert(t.version == 1L)
+    }
+  }
+
+  test("one log listing per snapshot read, at most two per append / merge / delete") {
+    val loc = tmp()
+    GraftTable.create(spark, loc, (1L to 20L).map(k => (k, s"v$k")).toDF("k", "v"),
+      keyCol = Some("k"))
+    SpecFileSystem.installed(this) {
+      val t = GraftTable.at(spark, loc)
+      t.checkpointInterval = 2 // half the commits below also write a checkpoint
+      def logListings(op: => Any): Int = {
+        SpecFileSystem.listed.clear()
+        op
+        SpecFileSystem.listed.asScala.count(_.endsWith("/_graft_log"))
+      }
+      assert(logListings(t.snapshot().collect()) <= 1)
+      (1 to 3).foreach { i =>
+        val k = 100L + i
+        assert(logListings(t.append(Seq((k, "new")).toDF("k", "v"))) <= 2)
+        assert(logListings(t.merge(Seq((k, "upd"), (k + 50, "ins")).toDF("k", "v"))) <= 2)
+        assert(logListings(t.deleteWhere(col("k") === i.toLong)) <= 2)
+        assert(logListings(t.snapshot().collect()) <= 1)
+      }
+      assert(t.version == 10L)
+      assert(new java.io.File(loc, f"_graft_log/${10L}%020d.checkpoint.json").exists())
+    }
+    assert(GraftTable.at(spark, loc).snapshot().count() == 23L)
   }
 }
